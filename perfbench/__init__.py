@@ -1,0 +1,5 @@
+"""Steady end-to-end and per-layer benchmark for the warehouse engine.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>``.  See ``perfbench/README.md``.
+"""
