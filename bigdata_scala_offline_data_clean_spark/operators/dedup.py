@@ -244,6 +244,10 @@ def jaccard_verify(
     intersection via gram join restricted to candidates; union from per-doc
     distinct-gram counts.  Output: (a, b, jaccard) with exact int/int
     division -> bit-identical double across engines.
+
+    Kept beside :func:`jaccard_verify_arrays` for callers that already
+    hold the exploded gram frame: on a104 the array verify's second
+    tokenize pass lost a back-to-back A/B (3.91 s vs 4.36 s, round 18).
     """
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
     sa = sh.select(F.col(id_col).alias("a"), "gram")
@@ -471,9 +475,13 @@ def minhash_band_index(
     (``write_bucketed(..., mode="append")``, same bucket spec).
 
     Since round 17 the rows come from the fused zero-shuffle Arrow pass
-    (:func:`_minhash_bands_py` -- bit-identical, see its parity notes);
-    the staged ``shingles -> minhash_signatures -> lsh_bands`` operators
-    remain the composable forms for callers that need the intermediates.
+    (:func:`_minhash_bands_py` -- bit-identical, see its parity notes).
+    The staged ``shingles -> minhash_signatures -> lsh_bands`` chain
+    stays as a126's production path: a126 persists the shingle frame
+    for its exact-truth join anyway, and an A/B with this pass swapped
+    in returned identical rows without winning (4 runs each, 4 cores:
+    sf0.01 median 2.27 s staged vs 2.45 s fused, sf0.1 13.9 s vs
+    14.4 s).
     """
     return _minhash_bands_py(
         df, id_col, text_col, shingle_n, num_hashes, bands
@@ -546,6 +554,10 @@ def serve_minhash_band_index(
             F.least("d_id", "c_id").alias("a"),
             F.greatest("d_id", "c_id").alias("b"),
         )
+        # a delta doc whose own band rows already sit in the index (s17's
+        # concurrent absorb can land them before this scan) must not
+        # pair with itself
+        .where(F.col("a") != F.col("b"))
     )
     within = (
         delta_bands.select(F.col(id_col).alias("a"), "band_id", "band_sig")
@@ -653,7 +665,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: pairs with Jaccard >= threshold.
 
@@ -675,9 +686,9 @@ def minhash_dedup_pairs(
     100 TB the gram stream never crosses the network at all -- only
     band rows and candidate-doc grams do).
 
-    The candidate-doc shingle frame still feeds three verify consumers
-    (gram sides + counts); ``persist_shingles`` pins it, now at
-    candidate scope rather than corpus scope.
+    The candidate-doc gram frame feeds both verify sides, so it is
+    persisted (at candidate scope, not corpus scope) unless an identical
+    plan is already cached.
     """
     from .ordering import pin_frame
 
@@ -695,7 +706,7 @@ def minhash_dedup_pairs(
     garr = gram_arrays(
         df.join(cand_ids, id_col, "left_semi"), id_col, text_col, shingle_n
     )
-    if persist_shingles and not _plan_already_cached(garr):
+    if not _plan_already_cached(garr):
         garr = garr.persist()
     return jaccard_verify_arrays(cands, garr, id_col).where(
         F.col("jaccard") >= threshold

@@ -354,8 +354,8 @@ def _ntile_prep(df, n, order_col, ascending, n_slices):
     numeric-domain check, the null/NaN guard, the checkpointed per-value
     count table with its POISON child, and the two-level value ranking.
 
-    Returns ``(b, counts_rk, poison, dt, bad)`` where ``b`` is ``df``
-    plus the guarded ``__ord`` order key, ``counts_rk`` is one row per
+    Returns ``(b, rk, poison)`` where ``b`` is ``df`` plus the guarded
+    ``__ord`` order key, ``rk`` is one row per non-null, non-NaN
     distinct order value with ``__cnt``/``__rb`` (rank before)/``__nt``
     (total rows), and ``poison`` is the zero-row frame whose execution
     raises if any null/NaN order value existed (see the guard notes

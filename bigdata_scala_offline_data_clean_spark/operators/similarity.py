@@ -1,16 +1,21 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- ``cosine_topk``: brute-force exact top-k -- the correctness baseline.
-  The query set is broadcast; candidates never shuffle until the final
-  per-query top-k window (shuffle keyed on query id, k rows per query
-  after AQE partial top-k).
-- ``lsh_ann_topk``: the scale path -- random-hyperplane LSH buckets shrink
-  the candidate set from |corpus| to |bucket|; recall is tunable with
-  ``planes``/``probes``.
+- ``cosine_topk``: brute-force exact top-k.  The query batch is
+  broadcast; each corpus partition scores it with one BLAS matmul in an
+  Arrow ``mapInPandas`` pass and ships only its per-query top-k, so the
+  final top-k window shuffles k-bounded rows per partition.
+- ``embedding_neardup_pairs`` / ``semdedup``: exact near-duplicate pairs
+  by the same Arrow + BLAS block matmul (whole corpus, or per cluster).
+- ``lsh_ann_topk`` / ``ivf_ann_topk``: the scale paths -- hyperplane-LSH
+  buckets or coarse clusters shrink the candidate set from |corpus| to
+  |bucket|; recall is tunable with ``planes``/``probes``.
+- ``pq_adc_topk_partials``: product-quantized asymmetric-distance top-k
+  candidates against a frozen codebook, one Arrow pass.
 
-Dot products run JVM-side via ``aggregate``/``zip_with`` over the array
-column (sequential fold -> deterministic double, reproducible by the
-DuckDB oracle's ordered list_reduce).  No Python row path anywhere.
+Every Arrow/BLAS path quantizes cosines HALF_UP at 6dp
+(:func:`_round_half_up6`), the DuckDB oracle's ``round(x, 6)``.  The
+Catalyst dot products (:func:`dot_product`) fold sequentially over the
+array column, bit-identical to the oracle's ordered ``list_reduce``.
 """
 
 from __future__ import annotations
@@ -55,92 +60,43 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> Column:
-    return df.withColumn(out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b))))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    round_digits: int | None = 6,
     label_col: str | None = None,
     carry_labels: bool = False,
-    method: str = "matmul",
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (q_id, n_id, cosine, rank).
 
     ``queries`` is broadcast (a query batch is small next to the corpus);
-    the corpus is scanned once, map-side.  ``round_digits`` quantizes the
-    score before ranking so rank order is stable across engines/platforms;
-    ties break on neighbor id ascending.
+    the corpus is scanned once, map-side.  Scores are quantized HALF_UP
+    at 6dp before ranking so rank order is stable across engines and
+    platforms; ties break on neighbor id ascending.
 
     ``label_col`` switches on hard-negative mode: labels ride both sides,
-    same-label pairs are dropped in the join condition (before scoring),
-    and the output gains ``(q_label, n_label)`` -- the
-    :func:`hard_negative_topk` contract, which delegates here so the
-    scoring/rounding/tie-break flow has exactly one implementation.
-    ``carry_labels`` keeps the labels on the output WITHOUT filtering
-    same-label pairs (the a172 label-noise contract).
+    same-label pairs are dropped before ranking, and the output gains
+    ``(q_label, n_label)`` -- the :func:`hard_negative_topk` contract,
+    which delegates here so the scoring/rounding/tie-break flow has
+    exactly one implementation.  ``carry_labels`` keeps the labels on the
+    output WITHOUT filtering same-label pairs (the a172 label-noise
+    contract).
 
-    ``method`` (optimization round 17, guide §4.2): ``"matmul"``
-    (default) scores each corpus partition against the broadcast query
-    matrix with one BLAS matmul inside ``mapInPandas`` and emits only the
-    per-partition top-``k`` rows per query -- the per-pair
-    ``aggregate``/``zip_with`` fold evaluates interpreted per element,
-    numpy does the same FLOPs vectorized (the established
-    ``_neardup_pairs_matmul`` pattern, same ``_round_half_up6``
-    quantization so ranks are the documented 6dp contract in both paths).
-    Partial top-k is exact: (cosine desc, n_id asc) is a total order, so
-    the union of per-partition top-k contains the global top-k, which the
-    final window then selects.  ``"fold"`` keeps the pure-Catalyst
-    sequential-fold path (bit-identical to the oracle BEFORE rounding).
-    The matmul path requires ``round_digits`` (rank stability across the
-    BLAS/fold ulp gap is what the quantization provides); unrounded
-    callers fall back to the fold.
+    Each corpus partition is scored against the broadcast query matrix
+    with one BLAS matmul inside ``mapInPandas`` and emits only its
+    top-``k`` rows per query (:func:`_topk_partials_matmul`).  Partial
+    top-k is exact: (cosine desc, n_id asc) is a total order, so the
+    union of per-partition top-k contains the global top-k, which the
+    final window then selects.
     """
-    from pyspark.sql import Window
-
-    use_matmul = method == "matmul" and round_digits is not None
-    if use_matmul:
-        scored = _topk_partials_matmul(
-            corpus, queries, id_col, vec_col, k, round_digits,
-            label_col=label_col, carry_labels=carry_labels,
-        )
-    else:
-        # per-vector norms computed before the join, not per pair (see
-        # embedding_neardup_pairs) -- identical fold, O(n*dim) instead of
-        # O(n*q*dim)
-        q_lbl = [F.col(label_col).alias("q_label")] if label_col else []
-        c_lbl = [F.col(label_col).alias("n_label")] if label_col else []
-        if carry_labels and not label_col:
-            raise ValueError("carry_labels requires label_col")
-        q = queries.select(
-            F.col(id_col).alias("q_id"),
-            *q_lbl,
-            F.col(vec_col).alias("__q_vec"),
-            _norm(F.col(vec_col)).alias("__q_norm"),
-        )
-        c = corpus.select(
-            F.col(id_col).alias("n_id"),
-            *c_lbl,
-            F.col(vec_col).alias("__c_vec"),
-            _norm(F.col(vec_col)).alias("__c_norm"),
-        )
-        cond = F.col("q_id") != F.col("n_id")
-        if label_col and not carry_labels:
-            cond = cond & (F.col("q_label") != F.col("n_label"))
-        scored = c.join(F.broadcast(q), cond).withColumn(
-            "cosine",
-            _dot(F.col("__q_vec"), F.col("__c_vec"))
-            / (F.col("__q_norm") * F.col("__c_norm")),
-        )
-        if round_digits is not None:
-            scored = scored.withColumn(
-                "cosine", F.round("cosine", round_digits)
-            )
+    if carry_labels and not label_col:
+        raise ValueError("carry_labels requires label_col")
+    scored = _topk_partials_matmul(
+        corpus, queries, id_col, vec_col, k,
+        label_col=label_col, carry_labels=carry_labels,
+    )
     w = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("n_id").asc()
     )
@@ -160,7 +116,6 @@ def _topk_partials_matmul(
     id_col: str,
     vec_col: str,
     k: int,
-    round_digits: int,
     label_col: str | None = None,
     carry_labels: bool = False,
 ) -> DataFrame:
@@ -169,13 +124,13 @@ def _topk_partials_matmul(
     The query batch (ids, labels, row-normalized float64 matrix) is a
     Spark broadcast -- bounded by the :func:`cosine_topk` contract (the
     query side IS the small side).  Each corpus partition computes one
-    ``block @ Q.T`` matmul, quantizes HALF_UP at ``round_digits`` (the
-    fold path's ``F.round`` mode -- :func:`_round_half_up6`'s ulp caveat
-    applies), masks self-pairs (and same-label pairs in hard-negative
-    mode), and emits its top-``k`` rows per query under the (cosine
-    desc, n_id asc) total order.  Output is a candidate superset of the
-    global top-k: ``<= k * n_queries`` rows per partition, so the final
-    window's exchange carries k-bounded rows, never |corpus| x |queries|.
+    ``block @ Q.T`` matmul, quantizes HALF_UP at 6dp
+    (:func:`_round_half_up6`), masks self-pairs (and same-label pairs in
+    hard-negative mode), and emits its top-``k`` rows per query under
+    the (cosine desc, n_id asc) total order.  Output is a candidate
+    superset of the global top-k: ``<= k * n_queries`` rows per
+    partition, so the final window's exchange carries k-bounded rows,
+    never |corpus| x |queries|.
     """
     import numpy as np
     import pandas as pd
@@ -199,7 +154,6 @@ def _topk_partials_matmul(
     )
     q_labels = qpdf[label_col].to_numpy() if label_col else None
     bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_m, q_labels))
-    scale = 10.0 ** round_digits
     exclude_same_label = bool(label_col) and not carry_labels
 
     def gen(batches):
@@ -221,9 +175,7 @@ def _topk_partials_matmul(
                 if label_col is not None
                 else None
             )
-            # HALF_UP quantization at round_digits (F.round's mode)
-            s = c @ b_m.T
-            s = np.sign(s) * np.floor(np.abs(s) * scale + 0.5) / scale
+            s = _round_half_up6(c @ b_m.T)
             mask = n_ids[:, None] == b_ids[None, :]
             if exclude_same_label:
                 mask |= n_labels[:, None] == b_labels[None, :]
@@ -260,7 +212,6 @@ def hard_negative_topk(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 5,
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Contrastive hard-negative mining: per query, the top-``k`` most
     cosine-similar corpus vectors with a DIFFERENT label.
@@ -278,7 +229,6 @@ def hard_negative_topk(
         id_col=id_col,
         vec_col=vec_col,
         k=k,
-        round_digits=round_digits,
         label_col=label_col,
     )
 
@@ -406,7 +356,6 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     planes: list[list[float]] | None = None,
-    method: str = "matmul",
     guard_max_chance_degree: float | None = None,
     guard_sample_size: int = 256,
 ) -> DataFrame:
@@ -421,23 +370,16 @@ def embedding_neardup_pairs(
     preserves the unguarded behavior; monitoring-style callers
     (a215/a216 themselves) must NOT set it.
 
-    With ``planes`` given, candidates come from hyperplane-LSH buckets (the
-    100 TB path: the self-join is keyed on the bucket id and high-cosine
-    pairs almost always share sign patterns); without, the exact all-pairs
-    comparison runs (correctness baseline -- quadratic, small corpora only).
-
-    ``method`` selects the exact path's execution strategy:
-
-    - ``"matmul"`` (default): Arrow-batched ``mapInPandas`` computing a
-      BLAS block matmul of each corpus partition against the broadcast
-      normalized matrix.  ~10x faster than the fold -- higher-order array
-      expressions evaluate interpreted per element, numpy does the same
-      FLOPs vectorized.  Requires one side to fit a broadcast, which the
-      exact-all-pairs baseline presupposes anyway (quadratic output).
-    - ``"fold"``: pure Catalyst ``aggregate``/``zip_with`` expressions,
-      sequential-fold determinism (bit-identical to the DuckDB oracle's
-      ordered list_reduce *before* rounding; matmul matches after the
-      documented round-to-6 quantization).
+    Without ``planes`` the exact all-pairs comparison runs as an
+    Arrow-batched BLAS block matmul of each corpus partition against the
+    broadcast normalized matrix (:func:`_neardup_pairs_matmul`; quadratic
+    output, so small corpora only, and the broadcast budget is enforced).
+    With ``planes`` given, candidates come from hyperplane-LSH buckets
+    instead (the 100 TB path: the self-join is keyed on the bucket id and
+    high-cosine pairs almost always share sign patterns) and are scored
+    with the Catalyst ``aggregate``/``zip_with`` fold -- the only path
+    that never materializes the corpus, so the one a corpus over
+    ``MATMUL_BROADCAST_BUDGET_BYTES`` must take.
     """
     if guard_max_chance_degree is not None:
         _percolation_guard(
@@ -445,7 +387,7 @@ def embedding_neardup_pairs(
             guard_max_chance_degree, "embedding_neardup_pairs",
             sample_size=guard_sample_size,
         )
-    if planes is None and method == "matmul":
+    if planes is None:
         return _neardup_pairs_matmul(corpus, id_col, vec_col, threshold)
     # norms are computed ONCE per vector before the join -- inside the
     # join condition they would be re-folded per PAIR (O(n^2 * dim) extra
@@ -460,12 +402,9 @@ def embedding_neardup_pairs(
         F.col(vec_col).alias("__vb"),
         _norm(F.col(vec_col)).alias("__nb"),
     )
-    if planes is not None:
-        a = a.withColumn("__bucket", lsh_bucket("__va", planes))
-        b = b.withColumn("__bucket", lsh_bucket("__vb", planes))
-        pairs = a.join(b, "__bucket").where(F.col("a") < F.col("b"))
-    else:
-        pairs = a.join(b, F.col("a") < F.col("b"))
+    a = a.withColumn("__bucket", lsh_bucket("__va", planes))
+    b = b.withColumn("__bucket", lsh_bucket("__vb", planes))
+    pairs = a.join(b, "__bucket").where(F.col("a") < F.col("b"))
     scored = pairs.withColumn(
         "cosine",
         F.round(
@@ -477,12 +416,12 @@ def embedding_neardup_pairs(
 
 
 def _round_half_up6(arr):
-    """numpy ROUND_HALF_UP at 6dp -- ``F.round``'s mode (away from zero
-    at midpoints), NOT numpy's banker's rounding, so the matmul paths
-    threshold the same 6dp value the fold paths do.  Residual caveat:
-    a BLAS dot and a sequential fold can still differ in the last ulp
-    BEFORE rounding; 6dp absorbs that except within ~1 ulp of a
-    rounding boundary."""
+    """numpy ROUND_HALF_UP at 6dp -- ``F.round``'s and the oracle's
+    ``round(x, 6)`` mode (away from zero at midpoints), NOT numpy's
+    banker's rounding.  Residual caveat: a BLAS dot and the oracle's
+    sequential ``list_reduce`` can still differ in the last ulp BEFORE
+    rounding; 6dp absorbs that except within ~1 ulp of a rounding
+    boundary."""
     import numpy as np
 
     return np.sign(arr) * np.floor(np.abs(arr) * 1e6 + 0.5) / 1e6
@@ -517,9 +456,9 @@ def _neardup_pairs_matmul(
     emits each block's ``block @ M.T`` rows above threshold with a < b.
     Work stays data-parallel across partitions; only the matrix (8nd
     bytes) is replicated, same budget as any broadcast join side.  Cosines
-    are rounded to 6 digits HALF_UP before thresholding, mirroring the
-    fold path's ``F.round`` (see :func:`_round_half_up6` for the ulp
-    caveat); zero-norm vectors never pair (:func:`_np_unit_rows`).
+    are rounded to 6 digits HALF_UP before thresholding
+    (:func:`_round_half_up6`, with its ulp caveat); zero-norm vectors
+    never pair (:func:`_np_unit_rows`).
 
     The broadcast budget is ENFORCED, not advisory (VERDICT r11/r12
     task): a bounded count+dim probe runs before ``toPandas()``, and a
@@ -875,35 +814,22 @@ def argmin_struct_sql(dists: list[str]) -> str:
     )
 
 
-def _l2_dists(vec_sql: str, centroids: list[list[float]]) -> Column:
-    """Array of sequential squared-L2 folds from the column ``vec_sql``
-    to each literal centroid -- the shared assignment primitive (fold
-    order matches the DuckDB twin exactly).  Takes the vector column as
-    SQL TEXT, not a Column: the literal tree is built as one expr string
-    (round 14, the recorded expr-text fold rule applied to its last
-    call sites)."""
-    return F.expr(
-        "array(" + ", ".join(l2_fold_sql(vec_sql, c) for c in centroids) + ")"
-    )
-
-
 def _l2_min_struct(vec_sql: str, centroids: list[list[float]]) -> Column:
-    """``struct(d, cid)`` of the nearest centroid in ONE fold pass."""
+    """``struct(d, cid)`` of the nearest centroid (squared L2, ties ->
+    first) in ONE sequential fold pass per centroid.  ``vec_sql`` is the
+    vector column's SQL text: the literal tree is built as one expr
+    string (round 14, the recorded expr-text fold rule).  Fold order
+    matches the DuckDB twin exactly, so this is also the Catalyst
+    reference that :func:`_assign_matmul` is pinned bit-identical to."""
     return F.expr(
         argmin_struct_sql([l2_fold_sql(vec_sql, c) for c in centroids])
     )
 
 
 def _ivf_bucket(vec_sql: str, centroids: list[list[float]]) -> Column:
-    """1-based index of the nearest centroid (squared L2), ties -> first.
-    ``vec_sql`` is the vector column's SQL text (see :func:`_l2_dists`);
+    """1-based index of the nearest centroid (squared L2), ties -> first;
     bigint, like the ``array_position`` form it replaces."""
-    return F.expr(
-        argmin_struct_sql(
-            [l2_fold_sql(vec_sql, c) for c in centroids]
-        )
-        + ".cid"
-    ).cast("bigint")
+    return _l2_min_struct(vec_sql, centroids)["cid"].cast("bigint")
 
 
 def ivf_ann_topk(
@@ -1168,144 +1094,6 @@ def train_pq_codebooks(
     return books
 
 
-def pq_encode(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebooks: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """(id, codes) with ``codes[j]`` = 0-based nearest centroid of subspace j.
-
-    Arrow-batched ``mapInPandas``: the argmin over ``m x ksub`` centroids is
-    a vectorized numpy matmul per batch -- the expression-tree form would
-    be m*ksub folded aggregates per row, far outside codegen comfort.  The
-    codebook broadcast is a few KB.
-    """
-    import numpy as np
-    import pandas as pd
-
-    books = np.asarray(codebooks, dtype=np.float64)  # m x ksub x dsub
-    m, _, dsub = books.shape
-    bc = df.sparkSession.sparkContext.broadcast(books)
-
-    def gen(batches):
-        bks = bc.value
-        for batch in batches:
-            ids = batch[id_col]
-            v = np.asarray(batch[vec_col].tolist(), dtype=np.float64)
-            v /= np.linalg.norm(v, axis=1, keepdims=True)
-            codes = np.empty((len(v), m), dtype=np.int32)
-            for j in range(m):
-                xs = v[:, j * dsub : (j + 1) * dsub]
-                # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin drops ||x||^2
-                d = -2.0 * xs @ bks[j].T + (bks[j] ** 2).sum(1)[None, :]
-                codes[:, j] = d.argmin(1)
-            yield pd.DataFrame({id_col: ids, "codes": list(codes)})
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, codes array<int>"
-    )
-
-
-def pq_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    refine: int = 50,
-    seed: int = 42,
-) -> DataFrame:
-    """PQ asymmetric-distance top-k: exact query subvectors against
-    quantized corpus codes, with exact re-ranking of the top ``refine``
-    pool per query.
-
-    Per query a flat ``m*ksub`` lookup table of squared L2 distances to
-    every centroid is built driver-side (queries are the small side, as in
-    IVF) and broadcast; a candidate's approximate distance is m JVM-side
-    array lookups -- ``aggregate(sequence, ...)`` over the codes, no
-    Python in the scoring path and no raw vectors read.  Output:
-    (q_id, n_id, approx_dist, rank), ties broken on id.
-    """
-    import numpy as np
-
-    from pyspark.sql import Window
-
-    books = train_pq_codebooks(
-        corpus, vec_col, m=m, ksub=ksub, seed=seed
-    )
-    bks = np.asarray(books)
-    _, real_ksub, dsub = bks.shape
-    codes = pq_encode(corpus, id_col, vec_col, books).withColumnRenamed(
-        id_col, "n_id"
-    )
-    q_rows = queries.select(id_col, vec_col).collect()
-    luts = []
-    for r in q_rows:
-        v = np.asarray(r[1], dtype=np.float64)
-        v /= np.linalg.norm(v)
-        lut = np.concatenate(
-            [
-                ((bks[j] - v[j * dsub : (j + 1) * dsub]) ** 2).sum(1)
-                for j in range(m)
-            ]
-        )
-        luts.append((r[0], [float(x) for x in np.round(lut, 9)]))
-    q_lut = corpus.sparkSession.createDataFrame(luts, ["q_id", "lut"])
-    dist = F.expr(
-        f"round(aggregate(sequence(0, {m - 1}), 0D, (acc, j) -> "
-        f"acc + lut[j * {real_ksub} + codes[j]]), 6)"
-    )
-    scored = (
-        codes.join(F.broadcast(q_lut), F.col("q_id") != F.col("n_id"))
-        .withColumn("approx_dist", dist)
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("approx_dist").asc(), F.col("n_id").asc()
-    )
-    pool = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= refine)
-        .select("q_id", "n_id", "approx_dist")
-    )
-    # refine: exact cosine over the approx pool only (refine rows per
-    # query, not the corpus) -- the standard ADC + re-rank design; the
-    # code distance orders the pool, the raw vectors order the answer
-    qv = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("__q_vec"),
-        _norm(F.col(vec_col)).alias("__q_norm"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("__c_vec"),
-        _norm(F.col(vec_col)).alias("__c_norm"),
-    )
-    exact = (
-        pool.join(F.broadcast(qv), "q_id")
-        .join(cv, "n_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("__q_vec"), F.col("__c_vec"))
-                / (F.col("__q_norm") * F.col("__c_norm")),
-                6,
-            ),
-        )
-    )
-    wr = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("n_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "approx_dist", "rank")
-    )
-
-
 def pq_adc_topk_partials(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1346,11 +1134,11 @@ def pq_adc_topk_partials(
       Catalyst division would.
 
     Output: ``(q_id, n_id, __dist)`` -- each corpus partition's top-k
-    rows per query under the (dist asc, n_id asc) total order, a
-    candidate superset of the global top-k (partial top-k under a
-    total order).  The caller's row_number window selects the final
-    pool; its exchange carries <= k * |queries| rows per partition
-    instead of |corpus| x |queries|.
+    non-self rows (``n_id != q_id``) per query under the (dist asc,
+    n_id asc) total order, a candidate superset of the global top-k
+    (partial top-k under a total order).  The caller's row_number
+    window selects the final pool; its exchange carries <= k *
+    |queries| rows per partition instead of |corpus| x |queries|.
     """
     import numpy as np
     import pandas as pd
@@ -1410,10 +1198,11 @@ def pq_adc_topk_partials(
                 code_j = _sub_dists(v, j).argmin(axis=1)  # first-min ties
                 dist = dist + b_lut[:, j, :][:, code_j].T  # j-ordered fold
             mask = n_ids[:, None] == b_ids[None, :]
-            dist[mask] = np.inf
-            # rows are n_id-sorted, so a STABLE argsort of dist is the
-            # (dist asc, n_id asc) rank order
-            top = np.argsort(dist, axis=0, kind="stable")[:k, :]
+            # rows are n_id-sorted and lexsort is stable, so this is the
+            # (dist asc, n_id asc) rank order with every self row ranked
+            # after every candidate -- a self row never takes a top-k
+            # slot from a genuine +inf or NaN distance
+            top = np.lexsort((dist, mask), axis=0)[:k, :]
             qi = np.broadcast_to(np.arange(nq)[None, :], top.shape).ravel()
             ci = top.ravel()
             keep = ~mask[ci, qi]
@@ -1438,15 +1227,13 @@ def _assign_matmul(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Arrow/numpy nearest-centroid assignment -- the large-k scale path
-    of :func:`semdedup` (round-11 10x measurement: the interpreted
-    per-centroid fold is the dominant term once k scales with the
-    corpus).  Emits the same frame shape as the fold path: ``(id, vec
-    float64, __nrm, cluster 1-based, __d2c)``; argmin ties break on the
-    first (lowest) centroid, like ``array_position(arr,
-    array_min(arr))``.
+    """Arrow/numpy nearest-centroid assignment for :func:`semdedup`
+    (round-11 10x measurement: the interpreted per-centroid fold is the
+    dominant term once k scales with the corpus).  Emits ``(id, vec
+    float64, cluster 1-based, __d2c)``; argmin ties break on the first
+    (lowest) centroid, like ``array_position(arr, array_min(arr))``.
 
-    BIT-IDENTICAL to the fold contract (ADVICE r14): the first cut
+    BIT-IDENTICAL to the SQL fold (ADVICE r14): the first cut
     expanded ``x.x - 2 x.c + c.c`` through BLAS, whose summation order
     differs from the sequential ``(x - c)^2`` fold in the last ulp --
     enough to flip near-tie argmins or a 6dp-boundary d2c against the
@@ -1485,7 +1272,6 @@ def _assign_matmul(
                 {
                     id_col: batch[id_col].to_numpy(),
                     vec_col: list(a),
-                    "__nrm": np.sqrt((a * a).sum(axis=1)),
                     "cluster": cl + 1,
                     "__d2c": d2[np.arange(len(a)), cl],
                 }
@@ -1495,7 +1281,7 @@ def _assign_matmul(
     return corpus.select(id_col, vec_col).mapInPandas(
         gen,
         schema=(
-            f"{id_col} {id_type}, {vec_col} array<double>, __nrm double, "
+            f"{id_col} {id_type}, {vec_col} array<double>, "
             "cluster int, __d2c double"
         ),
     )
@@ -1507,7 +1293,6 @@ def semdedup(
     threshold: float = 0.3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "fold",
     pair_block: int = 4096,
     guard_max_chance_degree: float | None = None,
     guard_sample_size: int = 256,
@@ -1521,8 +1306,9 @@ def semdedup(
     Returns one row per input vector: ``(id_col, cluster, group_id,
     d2c, is_kept)`` -- ``group_id`` is the minimum id reachable through
     the near-dup pair graph, ``d2c`` the squared L2 distance to the own
-    centroid (rounded 6 for output; the RAW fold orders the keeper
-    choice, bit-identical across engines per the a199 fold contract).
+    centroid (rounded 6 for output; the RAW distance orders the keeper
+    choice, bit-identical to the oracle's sequential fold -- see
+    :func:`_assign_matmul`).
 
     Scale: the within-cluster pair join is the SemDeDup contract -- the
     quantizer granularity is the knob that bounds it.  ``centroids``
@@ -1531,9 +1317,8 @@ def semdedup(
     corpus (paper regime k ~ sqrt(n) or finer) so per-cluster membership
     -- and with it the quadratic term -- stays bounded; the transitive
     closure is the same O(log n)-round star contraction as text dedup.
-    On the matmul path ``pair_block`` makes even a mis-trained whale
-    cluster survivable (round 13, upgrading the round-13a loud-error
-    cap): each cluster is split into id-ordered blocks of at most
+    ``pair_block`` makes even a mis-trained whale cluster survivable
+    (round 13): each cluster is split into id-ordered blocks of at most
     ``pair_block`` members and the pair search runs per BLOCK PAIR
     (i <= j), so no single task ever holds more than two blocks --
     per-task memory is O(pair_block^2) and the whale's quadratic pair
@@ -1551,6 +1336,8 @@ def semdedup(
     of them), so the corpus-level estimate is the right precondition
     for the within-cluster merge too.
     """
+    import pandas as pd
+
     from .dedup import connected_components
 
     if guard_max_chance_degree is not None:
@@ -1559,142 +1346,93 @@ def semdedup(
             guard_max_chance_degree, "semdedup",
             sample_size=guard_sample_size,
         )
-    if assign == "matmul":
-        v = _assign_matmul(corpus, centroids, id_col, vec_col)
-    elif assign == "fold":
-        # one struct fold yields BOTH the cluster and the distance; the
-        # checkpoint below pins the frame BEFORE field extraction, so
-        # the k-fold pass runs exactly once per row (the old
-        # array_position(darr, array_min(darr)) + array_min(darr)
-        # projection folded the k distances three times -- ADVICE r13's
-        # no-CSE-on-interpreted-HOFs point)
-        v = corpus.select(
+    # recompute pin: v feeds the pair search AND the final assignment,
+    # and the centroid distance pass is the dominant per-row cost --
+    # without the pin the corpus projection re-runs
+    v = _assign_matmul(corpus, centroids, id_col, vec_col).localCheckpoint(
+        eager=False
+    )
+    # per-cluster pairwise cosine via BLAS inside applyInPandas (round-11
+    # 10x measurement: with k scaled to the corpus the interpreted pair
+    # fold, not the assignment, dominates).  Whale-safe by construction
+    # (round 13): every cluster splits into id-ordered blocks of <=
+    # ``pair_block`` members, each row fans out to its block-pair
+    # participations, and the grouped kernel sees AT MOST TWO BLOCKS --
+    # a cluster of any size distributes its pair grid across (n_blocks^2
+    # + n_blocks) / 2 bounded tasks instead of one quadratic task.
+    # Fan-out per row is n_blocks (= |cluster| / pair_block), the
+    # inherent O(n^2 / pair_block) data movement of an exact pair search.
+    # Cosines round 6dp HALF_UP before thresholding (_round_half_up6);
+    # zero-norm rows never pair (_np_unit_rows).  Blocks are id-ordered,
+    # so cross-block pairs satisfy a < b automatically and same-block
+    # pairs filter on id -- each unordered pair is emitted exactly once.
+    w = Window.partitionBy("cluster").orderBy(F.col(id_col).asc())
+    vb = (
+        v.select("cluster", id_col, vec_col)
+        .withColumn(
+            "__blk",
+            F.floor(
+                (F.row_number().over(w) - 1) / F.lit(pair_block)
+            ).cast("int"),
+        )
+    )
+    nb = vb.groupBy("cluster").agg(F.max("__blk").alias("__nb"))
+    parts = (
+        vb.join(nb, "cluster")
+        .select(
+            "cluster",
             id_col,
             vec_col,
-            _norm(F.col(vec_col)).alias("__nrm"),
-            _l2_min_struct(vec_col, centroids).alias("__mc"),
-        )
-    else:
-        raise ValueError("assign must be 'fold' or 'matmul'")
-    # recompute pin (review fix): v feeds both self-join sides AND the
-    # final assignment, and the centroid distance pass is the dominant
-    # per-row cost -- without the pin the corpus projection re-runs 3x
-    v = v.localCheckpoint(eager=False)
-    if assign == "fold":
-        v = v.select(
-            id_col,
-            vec_col,
-            "__nrm",
-            F.col("__mc.cid").cast("int").alias("cluster"),
-            F.col("__mc.d").alias("__d2c"),
-        )
-    if assign == "matmul":
-        # scale path all the way down: per-cluster pairwise cosine via
-        # BLAS inside applyInPandas (round-11 10x measurement: with k
-        # scaled to the corpus the interpreted pair fold, not the
-        # assignment, dominates).  Whale-safe by construction (round 13,
-        # replacing the earlier loud-error cap): every cluster splits
-        # into id-ordered blocks of <= ``pair_block`` members, each row
-        # fans out to its block-pair participations, and the grouped
-        # kernel sees AT MOST TWO BLOCKS -- a cluster of any size
-        # distributes its pair grid across (n_blocks^2 + n_blocks) / 2
-        # bounded tasks instead of one quadratic task.  Fan-out per row
-        # is n_blocks (= |cluster| / pair_block), the inherent
-        # O(n^2 / pair_block) data movement of an exact pair search.
-        # Cosines round 6dp HALF_UP before thresholding -- F.round's
-        # mode, the fold-path contract (_round_half_up6); zero-norm
-        # rows never pair (_np_unit_rows).  Blocks are id-ordered, so
-        # cross-block pairs satisfy a < b automatically and same-block
-        # pairs filter on id -- each unordered pair is emitted exactly
-        # once.
-        import pandas as pd
-
-        w = Window.partitionBy("cluster").orderBy(F.col(id_col).asc())
-        vb = (
-            v.select("cluster", id_col, vec_col)
-            .withColumn(
-                "__blk",
-                F.floor(
-                    (F.row_number().over(w) - 1) / F.lit(pair_block)
-                ).cast("int"),
-            )
-        )
-        nb = vb.groupBy("cluster").agg(F.max("__blk").alias("__nb"))
-        parts = (
-            vb.join(nb, "cluster")
-            .select(
-                "cluster",
-                id_col,
-                vec_col,
-                F.explode(
-                    F.expr(
-                        "concat("
-                        "transform(sequence(__blk, __nb), "
-                        "  j -> struct(__blk as bi, j as bj, 0 as side)), "
-                        "case when __blk = 0 then array() else "
-                        "transform(sequence(0, __blk - 1), "
-                        "  i -> struct(i as bi, __blk as bj, 1 as side)) "
-                        "end)"
-                    )
-                ).alias("__p"),
-            )
-            .select(
-                "cluster", id_col, vec_col,
-                F.col("__p.bi").alias("__bi"),
-                F.col("__p.bj").alias("__bj"),
-                F.col("__p.side").alias("__side"),
-            )
-        )
-
-        def pgen(key, pdf):
-            import numpy as np
-
-            bi, bj = key[1], key[2]
-            left = pdf if bi == bj else pdf[pdf["__side"] == 0]
-            right = pdf if bi == bj else pdf[pdf["__side"] == 1]
-            ids_a = left[id_col].to_numpy()
-            ids_b = right[id_col].to_numpy()
-            if len(ids_a) == 0 or len(ids_b) == 0:
-                return pd.DataFrame({"a": ids_a[:0], "b": ids_b[:0]})
-            m_a = _np_unit_rows(
-                np.asarray(left[vec_col].tolist(), dtype=np.float64)
-            )
-            m_b = (
-                m_a
-                if bi == bj
-                else _np_unit_rows(
-                    np.asarray(right[vec_col].tolist(), dtype=np.float64)
+            F.explode(
+                F.expr(
+                    "concat("
+                    "transform(sequence(__blk, __nb), "
+                    "  j -> struct(__blk as bi, j as bj, 0 as side)), "
+                    "case when __blk = 0 then array() else "
+                    "transform(sequence(0, __blk - 1), "
+                    "  i -> struct(i as bi, __blk as bj, 1 as side)) "
+                    "end)"
                 )
-            )
-            sim = _round_half_up6(m_a @ m_b.T)
-            keep = (sim >= threshold) & (ids_a[:, None] < ids_b[None, :])
-            ai, bj_ = np.nonzero(keep)
-            return pd.DataFrame({"a": ids_a[ai], "b": ids_b[bj_]})
+            ).alias("__p"),
+        )
+        .select(
+            "cluster", id_col, vec_col,
+            F.col("__p.bi").alias("__bi"),
+            F.col("__p.bj").alias("__bj"),
+            F.col("__p.side").alias("__side"),
+        )
+    )
 
-        id_type = corpus.schema[id_col].dataType.simpleString()
-        pairs = (
-            parts.groupBy("cluster", "__bi", "__bj")
-            .applyInPandas(pgen, schema=f"a {id_type}, b {id_type}")
+    def pgen(key, pdf):
+        import numpy as np
+
+        bi, bj = key[1], key[2]
+        left = pdf if bi == bj else pdf[pdf["__side"] == 0]
+        right = pdf if bi == bj else pdf[pdf["__side"] == 1]
+        ids_a = left[id_col].to_numpy()
+        ids_b = right[id_col].to_numpy()
+        if len(ids_a) == 0 or len(ids_b) == 0:
+            return pd.DataFrame({"a": ids_a[:0], "b": ids_b[:0]})
+        m_a = _np_unit_rows(
+            np.asarray(left[vec_col].tolist(), dtype=np.float64)
         )
-    else:
-        a, b = v.alias("a"), v.alias("b")
-        cos = F.round(
-            dot_product(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-            / (F.col("a.__nrm") * F.col("b.__nrm")),
-            6,
-        )
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.cluster") == F.col("b.cluster"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .where(cos >= threshold)
-            .select(
-                F.col(f"a.{id_col}").alias("a"),
-                F.col(f"b.{id_col}").alias("b"),
+        m_b = (
+            m_a
+            if bi == bj
+            else _np_unit_rows(
+                np.asarray(right[vec_col].tolist(), dtype=np.float64)
             )
         )
+        sim = _round_half_up6(m_a @ m_b.T)
+        keep = (sim >= threshold) & (ids_a[:, None] < ids_b[None, :])
+        ai, bj_ = np.nonzero(keep)
+        return pd.DataFrame({"a": ids_a[ai], "b": ids_b[bj_]})
+
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    pairs = (
+        parts.groupBy("cluster", "__bi", "__bj")
+        .applyInPandas(pgen, schema=f"a {id_type}, b {id_type}")
+    )
     cc = connected_components(pairs).withColumnRenamed("node", id_col)
     assigned = v.join(cc, id_col, "left").select(
         id_col,

@@ -338,15 +338,7 @@ def a207_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .round10 import _seed_vectors
 
     e = load_table(spark, sf_dir, "embeddings")
-    # assign='matmul' (r17, guide §4.2): the within-cluster pair search
-    # runs as per-block BLAS instead of the interpreted per-pair dot
-    # fold self-join; the assignment fold is the dimension-at-a-time
-    # bit-identical form (see _assign_matmul) -- oracle re-verified
-    # exact at 3 SFs
-    return semdedup(
-        e, _seed_vectors(spark, sf_dir), threshold=_SD_COS,
-        assign="matmul",
-    )
+    return semdedup(e, _seed_vectors(spark, sf_dir), threshold=_SD_COS)
 
 
 def _a207_sql() -> str:

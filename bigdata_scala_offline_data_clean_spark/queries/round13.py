@@ -9,7 +9,7 @@ FIXED k is quadratic in the corpus (126x at 10x) while k ~ sqrt(n) with
 the BLAS assignment restores linearity -- but that scale path existed
 only as a SCALE.md prose claim.  This registers it: deterministic
 trained centroids (canonical-order bounded sample, k = isqrt(n)) +
-``semdedup(assign="matmul")`` -- vectorized nearest-centroid assignment
+``semdedup`` -- vectorized nearest-centroid assignment
 and tiled per-cluster BLAS pair search, whale-cluster capped.
 ORACLE-EXACT since round 14 (VERDICT r13 task #1): training is
 deterministic, so the sf0.01-trained centroids are frozen literals
@@ -52,7 +52,7 @@ _A209_KEEP_FLOOR = 0.5  # >= half the corpus must survive (paper regime
 
 def a209_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup at production k over the TRAINED quantizer: BLAS
-    assignment + tiled per-cluster pair search (assign='matmul').
+    assignment + tiled per-cluster pair search.
 
     Oracle-exact since round 14 (VERDICT r13 task #1) via the full a16
     shipped-artifact pattern: training is deterministic (canonical-order
@@ -92,7 +92,7 @@ def a209_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     out = pin_frame(  # consumed by the stat agg AND the final select
-        semdedup(e, A209_CENTROIDS, threshold=_SD_COS, assign="matmul")
+        semdedup(e, A209_CENTROIDS, threshold=_SD_COS)
     )
     stats = out.agg(
         F.round(F.avg(F.col("is_kept").cast("double")), 4).alias("keep_rate"),

@@ -465,7 +465,7 @@ def a218_semdedup_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, "embedding", "vec_id", tau, 1.0, "a218_semdedup_calibrated",
         n_total=n, sample_size=s_cap,
     )
-    sd = semdedup(e, A209_CENTROIDS, threshold=tau, assign="matmul")
+    sd = semdedup(e, A209_CENTROIDS, threshold=tau)
     return (
         sd.agg(
             F.count(F.lit(1)).alias("n_vecs"),

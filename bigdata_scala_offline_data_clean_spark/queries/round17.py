@@ -89,7 +89,7 @@ def a220_semdedup_production(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_total=n, sample_size=s_cap,
     )
     cents = _a220_trained_centroids(e, n, chk)
-    sd = semdedup(e, cents, threshold=tau, assign="matmul")
+    sd = semdedup(e, cents, threshold=tau)
     return (
         sd.agg(
             F.count(F.lit(1)).alias("n_vecs"),

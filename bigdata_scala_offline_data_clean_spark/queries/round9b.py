@@ -575,12 +575,11 @@ def a171_embedding_decontamination(
     # optimization round 17 (guide §4.2): the train-side scan now scores
     # each partition against the broadcast eval batch with one BLAS
     # matmul and emits per-partition top-1 partials (k=1 candidates);
-    # max over partials == the global max, at the same 6dp HALF_UP
-    # quantization the fold path rounded to.  The mod split makes
-    # eval/train ids disjoint, so the helper's self-pair mask never
-    # fires.  Replaces a |train| x |eval| fold crossJoin.
+    # max over partials == the global max, at the oracle's 6dp HALF_UP
+    # quantization.  The mod split makes eval/train ids disjoint, so the
+    # helper's self-pair mask never fires.
     partials = _topk_partials_matmul(
-        tr, ev, "vec_id", "embedding", 1, 6,
+        tr, ev, "vec_id", "embedding", 1,
         label_col="label", carry_labels=True,
     )
     per_eval = partials.groupBy("q_id", "q_label").agg(

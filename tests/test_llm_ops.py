@@ -944,37 +944,18 @@ def test_grouped_exact_percentiles_bit_identical_to_builtin(spark):
             assert got[(r["o_orderstatus"], q)] == v  # bit-identical
 
 
-def test_pq_ann_recall_and_code_shape(spark):
-    from pyspark.sql import functions as F
-
+def test_train_pq_codebooks_shape(spark):
     from bigdata_scala_offline_data_clean_spark.operators.similarity import (
-        cosine_topk,
-        pq_ann_topk,
-        pq_encode,
         train_pq_codebooks,
     )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     books = train_pq_codebooks(e, m=16, ksub=16)
+    dim = len(e.first()["embedding"])
     assert len(books) == 16 and all(len(b) <= 16 for b in books)
-    codes = pq_encode(e, "vec_id", "embedding", books)
-    row = codes.first()
-    assert len(row["codes"]) == 16
-    assert all(0 <= c < 16 for c in row["codes"])
-
-    q = e.where(F.col("vec_id") % 50 == 0)
-    got = {
-        (r["q_id"], r["n_id"])
-        for r in pq_ann_topk(e, q, k=5, m=16, refine=50).collect()
-    }
-    ref = {(r["q_id"], r["n_id"]) for r in cosine_topk(e, q, k=5).collect()}
-    assert len(got & ref) / len(ref) >= 0.7  # refined PQ recall floor
-    # determinism: fixed seed + tie-breaks -> identical reruns
-    again = {
-        (r["q_id"], r["n_id"])
-        for r in pq_ann_topk(e, q, k=5, m=16, refine=50).collect()
-    }
-    assert got == again
+    assert all(len(c) == dim // 16 for b in books for c in b)
+    # determinism: fixed seed -> identical codebooks
+    assert train_pq_codebooks(e, m=16, ksub=16) == books
 
 
 def test_fused_minhash_bands_match_staged_pipeline(spark):

@@ -22,6 +22,7 @@ from bigdata_scala_offline_data_clean_spark.operators.etl import (
     merge_full_outer,
     scd1_upsert,
 )
+from reference_models import union_find
 
 SETTINGS = settings(
     max_examples=12,
@@ -192,22 +193,7 @@ class TestConnectedComponents:
             ).collect()
         }
 
-        # driver-side union-find model
-        parent: dict[int, int] = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        model = {n: find(n) for n in parent}
-        assert out == model
+        assert out == union_find(edges)
 
 
 @pytest.mark.usefixtures("spark")

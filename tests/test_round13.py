@@ -82,43 +82,34 @@ def test_matmul_broadcast_budget_guard(spark, monkeypatch):
 
 
 def test_semdedup_whale_cluster_subsplit(spark):
-    """On the matmul path a cluster larger than pair_block must still
-    dedup CORRECTLY through the block-pair sub-split (no single task
-    ever sees more than two blocks), matching the fold path exactly --
-    including transitive groups that span block boundaries."""
+    """A cluster larger than pair_block must still dedup CORRECTLY
+    through the block-pair sub-split (no single task ever sees more than
+    two blocks), matching the reference model exactly -- including
+    transitive groups that span block boundaries."""
     from bigdata_scala_offline_data_clean_spark.operators.similarity import (
         semdedup,
     )
+    from reference_models import semdedup_model
 
     # 8-member single cluster; pair_block=3 -> blocks {0,1,2},{3,4,5},
     # {6,7}: near-dup families (0,1), (2,3) [SPANS a block boundary],
     # and (5,6,7) [chain across blocks] force cross-block pairs
     fam = {0: 0, 1: 0, 2: 1, 3: 1, 4: 2, 5: 3, 6: 3, 7: 3}
-    df = spark.createDataFrame(
-        [
-            (i, [1.0, 0.05 * fam[i] + 1e-6 * i, 0.0])
-            for i in range(8)
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
+    rows = [(i, [1.0, 0.05 * fam[i] + 1e-6 * i, 0.0]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     cents = [[1.0, 0.0, 0.0]]  # one 8-member cluster
-    key = lambda r: (r.cluster, r.group_id, r.is_kept)  # noqa: E731
-    fold = {
-        r.vec_id: key(r)
-        for r in semdedup(df, cents, threshold=0.9999).collect()
-    }
+    model = semdedup_model(rows, cents, 0.9999)
     for blk in (1, 2, 3, 8):
         mm = {
-            r.vec_id: key(r)
+            r.vec_id: (r.cluster, r.group_id, r.is_kept)
             for r in semdedup(
-                df, cents, threshold=0.9999, assign="matmul",
-                pair_block=blk,
+                df, cents, threshold=0.9999, pair_block=blk
             ).collect()
         }
-        assert mm == fold, f"pair_block={blk}"
+        assert mm == model, f"pair_block={blk}"
     # sanity: the families actually merged (0,1), (2,3), (5,6,7)
     groups = {}
-    for vid, (_, gid, _) in fold.items():
+    for vid, (_, gid, _) in model.items():
         groups.setdefault(gid, set()).add(vid)
     assert {frozenset(g) for g in groups.values()} == {
         frozenset({0, 1}), frozenset({2, 3}), frozenset({4}),
@@ -174,10 +165,10 @@ def test_exact_percentiles_pins_nondeterministic_input(spark):
 
 
 def test_a209_trained_semdedup_matmul_matches_fold(spark):
-    """a209's scale path (trained k = isqrt(n), assign='matmul') must
-    agree with the oracle-checked fold algebra on the SAME trained
-    centroids: clusters, groups, keeper choice -- and keep at least the
-    documented floor."""
+    """a209's scale path (trained k = isqrt(n)) must agree with the
+    sequential-fold reference model on the SAME trained centroids:
+    clusters, groups, keeper choice -- and keep at least the documented
+    floor."""
     import os
 
     from bigdata_scala_offline_data_clean_spark.operators.similarity import (
@@ -191,6 +182,7 @@ def test_a209_trained_semdedup_matmul_matches_fold(spark):
         _A209_KEEP_FLOOR,
         _SD_COS,
     )
+    from reference_models import semdedup_model
 
     sf = "/root/testdata/sf0.001"
     if not os.path.exists(f"{sf}/embeddings.parquet"):
@@ -202,16 +194,12 @@ def test_a209_trained_semdedup_matmul_matches_fold(spark):
     cents = train_ivf_centroids(
         e, n_clusters=k, sample_size=2048, seed=42, order_col="vec_id"
     )
-    key = lambda r: (r.cluster, r.group_id, r.is_kept)  # noqa: E731
-    fold = {
-        r.vec_id: key(r)
-        for r in semdedup(e, cents, threshold=_SD_COS).collect()
-    }
-    mm_rows = semdedup(
-        e, cents, threshold=_SD_COS, assign="matmul"
-    ).collect()
-    mm = {r.vec_id: key(r) for r in mm_rows}
-    assert fold == mm
+    model = semdedup_model(
+        [(r.vec_id, r.embedding) for r in e.collect()], cents, _SD_COS
+    )
+    mm_rows = semdedup(e, cents, threshold=_SD_COS).collect()
+    mm = {r.vec_id: (r.cluster, r.group_id, r.is_kept) for r in mm_rows}
+    assert mm == model
     kept = sum(1 for r in mm_rows if r.is_kept) / len(mm_rows)
     assert kept >= _A209_KEEP_FLOOR
 

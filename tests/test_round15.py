@@ -99,7 +99,7 @@ def test_a209_remediation_requires_threshold_recalibration(spark):
     )
 
     def keep_rate(tau):
-        out = semdedup(e, cents, threshold=tau, assign="matmul")
+        out = semdedup(e, cents, threshold=tau)
         return out.agg(
             F.avg(F.col("is_kept").cast("double")).alias("r")
         ).collect()[0]["r"]

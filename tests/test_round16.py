@@ -173,7 +173,7 @@ def test_percolation_guard_blocks_percolating_threshold(spark):
             e, threshold=0.3, guard_max_chance_degree=1.0
         )
     # ...and it fires before assignment work: the dummy centroid would
-    # blow up the fold if the guard ran second
+    # fail the assignment if the guard ran second
     with pytest.raises(PercolationRiskError):
         semdedup(
             e, centroids=[[0.0]], threshold=0.3, guard_max_chance_degree=1.0

@@ -401,7 +401,6 @@ def test_guard_runs_on_the_calibration_sample(spark):
         e,
         A209_CENTROIDS,
         threshold=tau,
-        assign="matmul",
         guard_max_chance_degree=1.0,
         guard_sample_size=s,
     )
