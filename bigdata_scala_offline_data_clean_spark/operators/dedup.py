@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ordering import pin_frame
+
 
 def _hash(seed: int, col: Column) -> Column:
     """Portable keyed hash: md5 over the seeded value (hex strings order
@@ -305,8 +307,6 @@ def ingest_neardup_dedup(
     # band rows from the fused zero-shuffle Arrow pass -- the gram
     # stream never leaves the worker -- and the exact verify
     # re-tokenizes ONLY candidate-pair documents per side.
-    from .ordering import pin_frame
-
     bands_new = _minhash_bands_py(
         new_df, id_col, text_col, shingle_n, num_hashes, bands
     )
@@ -498,7 +498,6 @@ def serve_minhash_band_index(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    reliable_pins: bool = False,
     delta_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup a delta against a PERSISTED band index: (a, b, jaccard)
@@ -521,11 +520,9 @@ def serve_minhash_band_index(
     and the serve reuses its materialized blocks; values are identical
     by the band determinism the absorb contract itself rests on.
     """
-    from .ordering import pin_frame
 
     delta_garr = pin_frame(  # feeds the verify union
-        gram_arrays(delta, id_col, text_col, shingle_n),
-        reliable=reliable_pins,
+        gram_arrays(delta, id_col, text_col, shingle_n)
     )
     if delta_bands is None:
         delta_bands = pin_frame(  # feeds the index join AND the self-join
@@ -536,8 +533,7 @@ def serve_minhash_band_index(
             # deltas are bounded by construction)
             _minhash_bands_py(
                 delta, id_col, text_col, shingle_n, num_hashes, bands
-            ),
-            reliable=reliable_pins,
+            )
         )
     # ONE distinct over the unioned candidate stream (round 18, guide
     # §2.4): the cross and within legs each carried their own distinct
@@ -570,9 +566,7 @@ def serve_minhash_band_index(
         .where(F.col("a") < F.col("b"))
         .select("a", "b")
     )
-    pairs = pin_frame(
-        cross.unionByName(within).distinct(), reliable=reliable_pins
-    )
+    pairs = pin_frame(cross.unionByName(within).distinct())
     cand_corpus_ids = (
         pairs.select(F.col("a").alias(id_col))
         .unionByName(pairs.select(F.col("b").alias(id_col)))
@@ -588,9 +582,7 @@ def serve_minhash_band_index(
     # array-based verify (round 18, see jaccard_verify_arrays): each
     # doc's grams attach to its pairs as ONE array cell instead of
     # exploded rows + a count re-aggregate
-    garr_verify = pin_frame(
-        delta_garr.unionByName(cand_corpus_garr), reliable=reliable_pins
-    )
+    garr_verify = pin_frame(delta_garr.unionByName(cand_corpus_garr))
     return jaccard_verify_arrays(pairs, garr_verify, id_col).where(
         F.col("jaccard") >= threshold
     )
@@ -690,7 +682,6 @@ def minhash_dedup_pairs(
     persisted (at candidate scope, not corpus scope) unless an identical
     plan is already cached.
     """
-    from .ordering import pin_frame
 
     band_rows = _minhash_bands_py(
         df, id_col, text_col, shingle_n, num_hashes, bands
@@ -758,10 +749,11 @@ def connected_components(
     rounds versus O(diameter) for naive label propagation, so a pathological
     duplication chain across a 100 TB corpus still terminates in a handful
     of shuffles.  Each round is two groupBy+join stages over the shrinking
-    edge set; ``localCheckpoint`` truncates the lineage so the plan does not
-    grow with iterations (on a cluster, use ``checkpoint`` to a reliable
-    dir instead).  Fixpoint = the edge set is a star around each component's
-    minimum; convergence is detected by edge-set equality.
+    edge set; an eager :func:`~.ordering.pin_frame` truncates the lineage
+    so the plan does not grow with iterations (replicated when the
+    session has a checkpoint dir).  Fixpoint = the edge set is a star
+    around each component's minimum; convergence is detected by edge-set
+    equality.
     """
     e0 = (
         edges.select(F.col(a).alias("u"), F.col(b).alias("v"))
@@ -781,7 +773,7 @@ def connected_components(
         # work one core finishes in milliseconds.  The distributed
         # large-star/small-star path below stays the 100 TB route.
         return _unionfind_components(e0, head)
-    e = e0.localCheckpoint(eager=True)
+    e = pin_frame(e0, eager=True)
     n_e = e.count()
     # right-size the iteration: near-dup edge sets are tiny relative to the
     # corpus, and a 32-partition loop pays ~30 empty tasks per stage; size
@@ -811,12 +803,12 @@ def connected_components(
         )
         smins = oriented.groupBy("u").agg(F.min("v").alias("mv"))
         joined = oriented.join(smins, "u")
-        e_new = (
+        e_new = pin_frame(
             joined.where(F.col("v") != F.col("mv"))
             .select(F.col("v").alias("u"), F.col("mv").alias("v"))
             .union(smins.select(F.col("u"), F.col("mv").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            eager=True,
         )
         # converged iff the (distinct) edge sets are equal: probe the
         # symmetric difference with ONE action (limit-1 short-circuits) --
@@ -1515,7 +1507,6 @@ def serve_hash64_band_index(
     max_hamming: int,
     id_col: str = "doc_id",
     hash_col: str = "ahash",
-    reliable_pins: bool = False,
 ) -> DataFrame:
     """Dedup a delta's fingerprints against a PERSISTED band index:
     ``(a, b, hamming)`` near-dup pairs with at least one delta side.
@@ -1529,11 +1520,9 @@ def serve_hash64_band_index(
     check re-reads bounded candidate texts).  Delta ids must be disjoint
     from index ids.  The delta-internal self-join covers new-vs-new
     duplicates."""
-    from .ordering import pin_frame
 
     d_rows = pin_frame(  # feeds the index join AND the self-join
-        hash64_band_rows(delta_hashes, id_col, hash_col),
-        reliable=reliable_pins,
+        hash64_band_rows(delta_hashes, id_col, hash_col)
     )
     cross = _hash64_cands(d_rows, index, id_col, hash_col)
     within = _hash64_cands(d_rows, d_rows, id_col, hash_col)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ordering import pin_frame
+
 PR_SCALE = 1_000_000_000_000  # 1e12: fixed-point unit
 
 
@@ -59,19 +61,18 @@ def bfs_hops(
     union-all-hops + ``min(hop)`` formulation row-for-row.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = e.localCheckpoint(eager=False)
-    visited = seeds.select(
-        F.col(node).alias("node"), F.lit(0).alias("hop")
-    ).localCheckpoint(eager=False)
+    e = pin_frame(e)
+    visited = pin_frame(
+        seeds.select(F.col(node).alias("node"), F.lit(0).alias("hop"))
+    )
     cur = visited.select("node")
     for k in range(1, max_hops + 1):
-        nxt = (
+        nxt = pin_frame(
             e.join(cur.withColumnRenamed("node", "u"), "u")
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(k).alias("hop"))
-            .localCheckpoint(eager=False)
         )
         visited = visited.unionByName(nxt)
         cur = nxt.select("node")
@@ -200,7 +201,7 @@ def kcore_peel(
     from functools import reduce
 
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = e.localCheckpoint(eager=False)
+    e = pin_frame(e)
     out = []
     for r in range(1, rounds + 1):
         deg = (
@@ -209,12 +210,11 @@ def kcore_peel(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        keep = deg.where(F.col("deg") >= k).localCheckpoint(eager=False)
-        e = (
+        keep = pin_frame(deg.where(F.col("deg") >= k))
+        e = pin_frame(
             e.join(keep.select(F.col("node").alias("u")), "u")
             .join(keep.select(F.col("node").alias("v")), "v")
             .select("u", "v")
-            .localCheckpoint(eager=False)
         )
         out.append(
             keep.agg(
@@ -271,16 +271,15 @@ def pagerank(
     # table -- every round's edge join stays INNER (measured ~1.7x faster
     # than the left-join/coalesce form at sf0.1, and at cluster scale it
     # keeps the coalesce off the fat edge side).
-    no_in = (
+    no_in = pin_frame(
         deg.select("u")
         .join(e.select(F.col("v").alias("u")).distinct(), "u", "left_anti")
         .select("u", F.lit(base).cast("bigint").alias("pr"))
-        .localCheckpoint(eager=False)
     )
     # rank table starts uniform at SCALE; each round: contribution =
     # rank div degree, summed over in-edges (exact BIGINT), then damp.
-    # localCheckpoint truncates the per-round plan (rank tables are node-
-    # sized); on a cluster use checkpoint() to a reliable dir instead.
+    # pin_frame truncates the per-round plan (rank tables are node-sized;
+    # replicated when the session has a checkpoint dir).
     r = deg.select("u", F.lit(PR_SCALE).cast("bigint").alias("pr"))
     for _ in range(iters):
         contrib = ed.join(r, "u").select(
@@ -293,24 +292,27 @@ def pagerank(
         # LAZY checkpoint (r17 A/B: 7.5s -> 5.2s at sf0.1): still
         # truncates each round's lineage and pins its blocks, but all
         # rounds materialize inside the ONE final job instead of paying
-        # an eager job barrier per iteration (guide §1.2)
-        r = contrib.groupBy("u").agg(
-            (
-                F.lit(base).cast("bigint")
-                + F.expr(f"({d_num} * sum(c)) div {d_den}")
-            ).alias("pr")
-        ).unionByName(no_in).localCheckpoint(eager=False)
+        # an eager job barrier per iteration (guide §1.2); with a
+        # checkpoint dir each round's pin is eager and replicated
+        r = pin_frame(
+            contrib.groupBy("u").agg(
+                (
+                    F.lit(base).cast("bigint")
+                    + F.expr(f"({d_num} * sum(c)) div {d_den}")
+                ).alias("pr")
+            ).unionByName(no_in)
+        )
     # one final backfill restores the full source universe in the output
     # (no-in-edge nodes sit at the base rank); eager checkpoint
     # materializes the node-sized result so the edge cache can be released
-    out = (
+    out = pin_frame(
         deg.select("u")
         .join(r, "u", "left")
         .select(
             F.col("u").alias("node"),
             F.coalesce(F.col("pr"), F.lit(base)).cast("bigint").alias("pr"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     ed.unpersist()
     return out
@@ -355,13 +357,12 @@ def triangle_census(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
         .where(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
-    e = e.localCheckpoint(eager=False)
-    deg = (
+    e = pin_frame(e)
+    deg = pin_frame(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)
     )
     # orientation key (deg, node) totally orders endpoints; broadcast is
     # NOT used -- deg is node-sized, so both joins shuffle on the node
@@ -371,14 +372,13 @@ def triangle_census(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     lo_first = (F.col("__du") < F.col("__dv")) | (
         (F.col("__du") == F.col("__dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = pin_frame(
         e.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .localCheckpoint(eager=False)
     )
     w1 = oriented.select(F.col("s"), F.col("t").alias("b"))
     w2 = oriented.select(F.col("s"), F.col("t").alias("c"))

@@ -22,6 +22,8 @@ and by the DuckDB oracle), with max task size |table|/256 instead of
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -107,46 +109,69 @@ def _record_prepin(df: DataFrame) -> None:
         pass  # diagnostics only -- never fail the query for a dump
 
 
-def pin_frame(df: DataFrame, reliable: bool = False) -> DataFrame:
-    """Pin a nondeterministic multi-consumer frame to ONE evaluation.
+def pin_frame(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once, so every consumer sees ONE evaluation.
 
-    Default: ``localCheckpoint(eager=False)`` -- cheap, but the pinned
-    blocks live in non-replicated executor storage, so on a real cluster
-    losing an executor mid-query FAILS the job (no lineage replay).
+    The package's only materialization primitive.  The policy comes
+    from the session, with one rule: **a checkpoint dir means every pin
+    is replicated and eager.**
 
-    ``reliable=True`` (VERDICT r10 task #4 / ADVICE r9): RELIABLE
-    ``checkpoint(eager=False)`` into the session's checkpoint dir
-    (``build_session(checkpoint_dir=...)`` or
-    ``SPARK_GRAFT_CHECKPOINT_DIR``) -- replicated storage, survives
-    executor loss, same determinism pin, at the cost of one write to the
-    checkpoint filesystem.  Flip it when the pinned frame is large enough
-    (or the query long enough) that a mid-query executor loss is likely:
-    the group-sized stat frames here are tiny, so the WRITE is cheap and
-    the only real cost is checkpoint-dir round-trip latency.  Raises
-    up-front if no checkpoint dir is configured -- Spark's own error at
-    materialization time is far less actionable.
+    - No checkpoint dir (local runs, the bench): ``localCheckpoint``
+      with the caller's ``eager``.  Cheap, but the blocks live in
+      non-replicated executor storage, so losing an executor mid-query
+      fails the job (no lineage replay).
+    - A checkpoint dir (``build_session(checkpoint_dir=...)`` or
+      ``SPARK_GRAFT_CHECKPOINT_DIR``): ``checkpoint(eager=True)`` into
+      it -- replicated storage that survives executor loss.  It is
+      always eager: a lazy reliable checkpoint evaluates its input once
+      for the first consumer and again for the checkpoint write, so the
+      consumers of a nondeterministic frame see different rows.
+
+    ``eager=True`` computes the pin now.  Callers use it before they
+    overwrite or delete the pinned frame's source: a query returning
+    rows read back from its scratch dir, an index rewrite reading the
+    table it replaces.  The frozen partitions stay executor-side, so
+    nothing crosses to the driver.  Without a checkpoint dir such a pin
+    is the only copy of its rows: an executor loss after the source is
+    gone cannot be recomputed.  With a dir the rows survive it.
     """
     _record_prepin(df)
-    if not reliable:
-        return df.localCheckpoint(eager=False)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable=True needs a checkpoint dir: build_session("
-            "checkpoint_dir=...) or SPARK_GRAFT_CHECKPOINT_DIR"
-        )
-    return df.checkpoint(eager=False)
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=True)
 
 
-def auto_reliable_pins(spark) -> bool:
-    """Resolve the production default for ``reliable_pins`` (round 18,
-    VERDICT r17 task #10): when the session has a reliable checkpoint
-    dir configured (``build_session(checkpoint_dir=...)`` or
-    ``SPARK_GRAFT_CHECKPOINT_DIR``), composite lifecycles upgrade every
-    stage pin from non-replicated ``localCheckpoint`` to a replicated
-    ``checkpoint`` so a real-cluster run survives executor loss.  With
-    no dir configured (the local bench) nothing changes."""
-    return spark.sparkContext.getCheckpointDir() is not None
+def run_concurrently(*legs: Callable[[], Any]) -> list:
+    """Run independent driver jobs at the same time; the package's only
+    concurrency primitive.
+
+    Each leg runs on its own :class:`pyspark.InheritableThread`, which
+    copies the caller's job properties (group, description, scheduler
+    pool) into the jobs the leg submits.  Returns the legs' results in
+    leg order and, once every leg has finished, re-raises the error of
+    the first failed leg.  Legs must touch disjoint outputs: the result
+    must not depend on which leg finishes first.
+    """
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(legs)
+    errors: list[BaseException | None] = [None] * len(legs)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = legs[i]()
+        except BaseException as exc:  # re-raised on the caller's thread
+            errors[i] = exc
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(len(legs))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results
 
 
 def _bsearch_below_sql(arr_sql: str, v_sql: str, m: int) -> str:
@@ -221,8 +246,8 @@ def _equidepth_slices(
     slice offsets are exact sums).  The sketch is merge-order
     NONDETERMINISTIC across evaluations, and the sliced frame feeds two
     plan branches (slice totals and the final join) -- so the 1-row
-    boundary frame is localCheckpointed to a single RDD both branches
-    scan: without that pin, slice-id consistency between the offset
+    boundary frame is pinned (:func:`pin_frame`) to a single RDD both
+    branches scan: without that pin, slice-id consistency between the offset
     computation and the row assignment would silently ride on Spark's
     exchange-reuse rule (round-9 review fix).  Everything stays
     declarative: the boundary array rides a broadcast 1-row frame, no
@@ -234,10 +259,12 @@ def _equidepth_slices(
         return counts.crossJoin(
             F.broadcast(counts.agg(F.sum(cnt).alias("__nt")))
         ).withColumn("__s", F.lit(0))
-    mm = counts.agg(
-        F.expr(_edge_sketch_sql(vd, n_slices)).alias("__bnds"),
-        F.sum(cnt).alias("__nt"),
-    ).localCheckpoint(eager=False)
+    mm = pin_frame(
+        counts.agg(
+            F.expr(_edge_sketch_sql(vd, n_slices)).alias("__bnds"),
+            F.sum(cnt).alias("__nt"),
+        )
+    )
     return counts.crossJoin(F.broadcast(mm)).withColumn(
         "__s",
         F.expr(_bsearch_below_sql("__bnds", vd, n_slices - 1)).cast("int"),
@@ -435,10 +462,8 @@ def _ntile_prep(df, n, order_col, ascending, n_slices):
     # with an expensive input lineage should likewise persist/checkpoint
     # `df` -- it is scanned by the count aggregate and both join-back
     # branches.)
-    counts_all = (
-        b.groupBy("__ord")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .localCheckpoint(eager=False)
+    counts_all = pin_frame(
+        b.groupBy("__ord").agg(F.count(F.lit(1)).alias("__cnt"))
     )
     poison = (
         counts_all.agg(
@@ -670,7 +695,6 @@ def exact_percentiles_frame(
     col: str,
     qs: list[float],
     buckets: int = 256,
-    reliable: bool = False,
 ) -> DataFrame:
     """LAZY exact interpolated percentiles: a ``(q, value)`` frame, one
     row per requested quantile, materialized in ONE Spark action when
@@ -701,7 +725,6 @@ def exact_percentiles_frame(
         qs,
         buckets,
         _single_group=True,
-        reliable=reliable,
     ).drop("__g")
 
 
@@ -710,7 +733,6 @@ def exact_percentiles(
     col: str,
     qs: list[float],
     buckets: int = 256,
-    reliable: bool = False,
 ) -> dict[float, float | None]:
     """Eager exact interpolated percentiles as ``{q: value}``.
 
@@ -743,8 +765,7 @@ def exact_percentiles(
 
     The input frame is pinned (:func:`pin_frame`) before the first
     action so all three actions see ONE evaluation even on a
-    nondeterministic source; ``reliable=True`` upgrades the pin to a
-    replicated checkpoint for long queries on lossy clusters.
+    nondeterministic source.
     """
     import math
 
@@ -758,7 +779,7 @@ def exact_percentiles(
     # a nondeterministic input (fresh uuid/rand columns, a re-listed
     # source) could desync the bucket census from the ranking scan.
     # Pin to ONE evaluation (same contract as grouped_exact_percentiles).
-    rows = pin_frame(rows, reliable=reliable)
+    rows = pin_frame(rows)
     mm = rows.agg(
         F.min("v").alias("lo"),
         F.max("v").alias("hi"),
@@ -856,7 +877,6 @@ def grouped_exact_percentiles(
     qs: list[float],
     buckets: int = 256,
     _single_group: bool = False,
-    reliable: bool = False,
     small_groups: bool = False,
     spread_input: bool = True,
 ) -> DataFrame:
@@ -922,21 +942,17 @@ def grouped_exact_percentiles(
         from .etl import spread_narrow_scan
 
         rows = spread_narrow_scan(rows, "v")
-    # localCheckpoint pins the nondeterministic sketch to ONE evaluation:
+    # pin_frame pins the nondeterministic sketch to ONE evaluation:
     # `binned` feeds both the bucket-count branch and the needed-bucket
     # ranking branch, and divergent re-evaluations of __bnds would give
     # the two branches different bucket ids (round-9 review fix -- same
-    # pin as _equidepth_slices).  The default localCheckpoint pin cannot
-    # survive executor loss (no lineage replay); pass ``reliable=True``
-    # with a configured checkpoint dir to pin via replicated
-    # ``checkpoint()`` instead -- see :func:`pin_frame` (VERDICT r10
-    # task #4) for the tradeoff and when to flip it.
+    # pin as _equidepth_slices).  With a checkpoint dir set the pin is
+    # replicated and survives executor loss -- see :func:`pin_frame`.
     stats = pin_frame(
         rows.groupBy(*g).agg(
             F.count("v").alias("__n"),
             F.expr(_edge_sketch_sql("v", buckets)).alias("__bnds"),
-        ),
-        reliable=reliable,
+        )
     )
     # a degenerate (all-equal) group folds to bucket 0 naturally: every
     # boundary equals the value, and the strict < admits none

@@ -25,6 +25,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ordering import pin_frame
+
 
 def dot_product(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in double precision (deterministic).
@@ -479,7 +481,7 @@ def _neardup_pairs_matmul(
     # (but the probe action has by then materialized the projection
     # into executor memory/disk -- ADVICE r14 -- so the error path
     # frees those blocks before raising).
-    proj = corpus.select(id_col, vec_col).localCheckpoint(eager=False)
+    proj = pin_frame(corpus.select(id_col, vec_col))
     probe = proj.select(
         F.count(F.lit(1)).alias("n"),
         F.max(F.size(F.col(vec_col))).alias("d"),
@@ -490,7 +492,7 @@ def _neardup_pairs_matmul(
         try:
             # free the checkpointed projection blocks (the probe pinned
             # them executor-side).  JVM-internal reach-in: the Python
-            # DataFrame API exposes no handle to a localCheckpoint's
+            # DataFrame API exposes no handle to a pinned frame's
             # RDD; LogicalRDD.rdd() verified on Spark 4.1.x -- on a
             # version bump a signature change degrades to the old
             # blocks-linger-until-GC behavior, never an error.
@@ -1349,9 +1351,7 @@ def semdedup(
     # recompute pin: v feeds the pair search AND the final assignment,
     # and the centroid distance pass is the dominant per-row cost --
     # without the pin the corpus projection re-runs
-    v = _assign_matmul(corpus, centroids, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
+    v = pin_frame(_assign_matmul(corpus, centroids, id_col, vec_col))
     # per-cluster pairwise cosine via BLAS inside applyInPandas (round-11
     # 10x measurement: with k scaled to the corpus the interpreted pair
     # fold, not the assignment, dominates).  Whale-safe by construction

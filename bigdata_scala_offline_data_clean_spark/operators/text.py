@@ -635,13 +635,13 @@ def oov_rate(
     # pin the vocab across the size probe and the join: a corpus-derived
     # vocab is itself a full explode+groupBy pipeline, and without the pin
     # the probe's limit+count job recomputes it a second time for the join
-    # (a second corpus scan at 100 TB).  localCheckpoint instead of
+    # (a second corpus scan at 100 TB).  A pin instead of
     # persist(): persisted blocks stay in the catalog cache until an
     # explicit unpersist -- which this function cannot issue (it returns a
     # lazy frame) -- so a session running many queries (the 300-query
     # sweep) accumulates them (ADVICE r9).  Checkpoint blocks free when
     # the JVM collects the RDD, i.e. when callers drop the result.
-    v = v.localCheckpoint(eager=False)
+    v = pin_frame(v)
     small = (
         max_broadcast_tokens is not None
         and v.limit(max_broadcast_tokens + 1).count() <= max_broadcast_tokens
@@ -769,10 +769,14 @@ def bpe_merge_rounds(
         .groupBy("w")
         .agg(F.sum(F.lit(1)).alias("freq"))
     )
-    seq = wf.select(
-        "freq",
-        F.expr("array_join(regexp_extract_all(w, '.', 0), ' ')").alias("seq"),
-    ).localCheckpoint(eager=False)
+    seq = pin_frame(
+        wf.select(
+            "freq",
+            F.expr("array_join(regexp_extract_all(w, '.', 0), ' ')").alias(
+                "seq"
+            ),
+        )
+    )
     out = []
     for r in range(1, rounds + 1):
         pairs = (
@@ -793,9 +797,7 @@ def bpe_merge_rounds(
             .groupBy(F.col("z.p1").alias("p1"), F.col("z.p2").alias("p2"))
             .agg(F.sum("freq").alias("cnt"))
         )
-        top = pairs.orderBy(
-            F.desc("cnt"), "p1", "p2"
-        ).limit(1).localCheckpoint(eager=False)
+        top = pin_frame(pairs.orderBy(F.desc("cnt"), "p1", "p2").limit(1))
         out.append(
             top.select(
                 F.lit(r).alias("round"),
@@ -809,15 +811,13 @@ def bpe_merge_rounds(
             "replace(concat(' ', {s}, ' '),"
             " concat(' ', p1, ' ', p2, ' '), concat(' ', p1, p2, ' '))"
         )
-        seq = (
-            seq.crossJoin(F.broadcast(top.select("p1", "p2")))
-            .select(
+        seq = pin_frame(
+            seq.crossJoin(F.broadcast(top.select("p1", "p2"))).select(
                 "freq",
                 F.expr(
                     "trim(" + merge_once.format(s=merge_once.format(s="seq")) + ")"
                 ).alias("seq"),
             )
-            .localCheckpoint(eager=False)
         )
     from functools import reduce
 
@@ -1035,7 +1035,6 @@ def winnow_span_dedup(
     w: int = 4,
     keep: str = "first",
     min_doc_freq: int = 2,
-    reliable: bool = False,
 ) -> DataFrame:
     """Duplicated-span REMOVAL (Lee et al. 2022-style substring dedup,
     winnowing-localized): excise from each document every character span
@@ -1086,11 +1085,8 @@ def winnow_span_dedup(
     # pin: runs feeds BOTH the duplicated-fp groupBy and the fp join
     # below -- without it the per-character gram-hash arrays are
     # recomputed per consumer (the corpus must be scanned ~2x, not 4x).
-    # Deterministic frame, so this is purely a recompute guard;
-    # reliable=True (with a configured checkpoint dir) swaps in
-    # replicated checkpoint() so an executor loss recomputes instead of
-    # failing the job -- see ordering.pin_frame (VERDICT r10 task #4).
-    runs = pin_frame(runs, reliable=reliable)
+    # Deterministic frame, so this is purely a recompute guard.
+    runs = pin_frame(runs)
 
     # duplicated fingerprints + their canonical keeper (min id); a plain
     # fp groupBy -- no pair join, no cap needed at any corpus size

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import dsum, load_table, ts_str
 
@@ -791,7 +792,6 @@ def a16_embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     wk = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("n_id").asc()
     )
-    from ..operators.ordering import pin_frame
 
     ann = pin_frame(  # recall consumes ann twice; never re-fold the corpus
         scored.withColumn("rank", F.row_number().over(wk))

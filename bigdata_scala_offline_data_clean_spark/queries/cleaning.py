@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import Warehouse
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table, ts_str
+from ._util import load_table, ts_str
 
 ORDER_SEL = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
 
@@ -60,7 +61,8 @@ def c01_write_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partition col may be type-inferred by the reading session; pin string
         back = back.withColumn("etl_date", F.col("etl_date").cast("string"))
         out = back.select(*ORDER_SEL, "o_orderdate", "etl_date")
-        out = freeze_result(out)  # materialize executor-side before rmtree
+        # materialize executor-side before rmtree
+        out = pin_frame(out, eager=True)
         return out
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -142,7 +144,7 @@ def c02_delta_merge_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dwd_modify_time",
             "etl_date",
         )
-        return freeze_result(out)
+        return pin_frame(out, eager=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -724,7 +726,7 @@ def c15_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "etl_date string, n_files_before long, n_files_after long",
         )
         out = summary.join(files, "etl_date")
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -18,8 +18,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import day_str, dsum, freeze_result, load_table, ts_str
+from ._util import day_str, dsum, load_table, ts_str
 
 # ---------------------------------------------------------------------------
 # a65 -- interval coalescing (gaps-and-islands).  Each event opens a 30-min
@@ -498,7 +499,7 @@ def c24_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = back[0]
         for df in back[1:]:
             out = out.unionByName(df)
-        out = freeze_result(out)  # pre-rmtree
+        out = pin_frame(out, eager=True)  # pre-rmtree
         return out
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -680,7 +681,7 @@ def c25_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(None).cast("double").alias("price_sum"),
             )
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -723,7 +724,7 @@ def c26_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("o_orderkey").alias("key_sum"),
             dsum("o_totalprice").alias("price_sum"),
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -828,7 +829,6 @@ def a76_embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     wk = Window.partitionBy("q_id").orderBy(
         F.col("cosine").desc(), F.col("n_id").asc()
     )
-    from ..operators.ordering import pin_frame
 
     ann = pin_frame(  # recall consumes ann twice; never re-encode the corpus
         rer.withColumn("rank", F.row_number().over(wk))
@@ -1009,7 +1009,7 @@ def c27_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_orderkey").alias("n_orders"),
             dsum("l_extendedprice").alias("revenue"),
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_c27_orders")
         spark.sql("DROP TABLE IF EXISTS dwd_c27_items")

@@ -22,8 +22,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import day_str, dsum, freeze_result, load_table, ts_str
+from ._util import day_str, dsum, load_table, ts_str
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -69,7 +70,7 @@ def c33_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum("value").alias("value_sum"),
             )
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -630,7 +631,7 @@ def c37_sqlwh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum("value").alias("value_sum"),
             )
         )
-        return freeze_result(out)  # pre-drop
+        return pin_frame(out, eager=True)  # pre-drop
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {prefix}dwd CASCADE")
 
@@ -820,7 +821,7 @@ def c38_multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
             dsum("value").alias("value_sum"),
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

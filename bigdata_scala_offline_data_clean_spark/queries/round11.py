@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import load_table
 
@@ -177,10 +178,8 @@ def a205_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 64-row cnts (bit-identical integers to a direct corpus aggregate).
     # The pin keeps the explode from re-running for the cnts and score
     # branches; dtf is (doc, bucket)-sized, <= 64 rows per doc.
-    dtf = (
-        tb.groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+    dtf = pin_frame(
+        tb.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("tf"))
     )
     is_t = F.when(F.col("lang") == _DSIR_TARGET_LANG, F.col("tf")).otherwise(
         F.lit(0)

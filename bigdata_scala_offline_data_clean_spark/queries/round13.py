@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import load_table
 
@@ -86,7 +87,6 @@ def a209_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round15.py::
     test_a209_remediation_requires_threshold_recalibration.
     """
-    from ..operators.ordering import pin_frame
     from ..operators.similarity import semdedup
     from .quantizers import A209_CENTROIDS
 
@@ -323,28 +323,13 @@ _C68_CTX = 512  # packing context length (a43's)
 _C68_K, _C68_W = 20, 6
 
 
-def c68_curation_packing_funnel(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
-    from functools import partial, reduce
+def c68_curation_packing_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from functools import reduce
 
     from ..operators.dedup import dedup_clusters, minhash_dedup_pairs
-    from ..operators.ordering import pin_frame
     from ..operators.text import token_count_bpe, winnow_span_dedup
     from .analytics import _MH_BANDS, _MH_N, _MH_SHINGLE, _MH_THRESHOLD
     from .round11 import _DSIR_B, _DSIR_TARGET_LANG, _LR_DEC, _TF_DEC
-
-    # ``reliable_pins`` (round 14, VERDICT r13 task #5): the stage pins
-    # default to non-replicated localCheckpoint -- fine at local[32],
-    # lost-executor-fatal on a cluster.  A production run flips this to
-    # route every stage pin through the replicated checkpoint dir
-    # (pin_frame(reliable=True); requires build_session(checkpoint_dir)
-    # or SPARK_GRAFT_CHECKPOINT_DIR).  Values identical either way.
-    pin_frame = partial(pin_frame, reliable=reliable_pins)
 
     d = load_table(spark, sf_dir, "documents")
     # stage 1: doc-level near-dup prune (keep each cluster's min-id rep)
@@ -705,7 +690,6 @@ def _a211_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def a211_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ordering import pin_frame
 
     scored = pin_frame(  # consumed by the accuracy agg + output
         _a211_scored(spark, sf_dir)
@@ -866,29 +850,19 @@ def _ivf_index_lifecycle(
     *,
     erase_mod: int | None = None,
     erase_rem: int = 0,
-    reliable_pins: bool | None = None,
 ) -> DataFrame:
     """Shared c69/c73 body: build the cell-partitioned IVF index,
     optionally PHYSICALLY erase ``vec_id % erase_mod == erase_rem``
     (``Warehouse.erase_partition_rows`` -- only affected cell
     partitions rewritten, round 15), then serve probed cells and verify
     recall against the exact reference over the LIVE corpus."""
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
-
-
     import shutil
     import tempfile
-    from functools import partial
 
     from pyspark.sql import Window
 
-    from ..operators.ordering import pin_frame
     from ..operators.similarity import cosine_topk, dot_product
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .analytics import (
         _A16_PROBES,
         _A16_RECALL_FLOOR,
@@ -900,9 +874,6 @@ def _ivf_index_lifecycle(
         _norm_sql,
     )
     from .quantizers import A16_CENTROIDS
-
-    # reliable_pins: see c68 -- replicated stage pins for cluster runs
-    pin_frame = partial(pin_frame, reliable=reliable_pins)
 
     e = load_table(spark, sf_dir, "embeddings")
     dists = [_l2_lit_fold_sql("embedding", c) for c in A16_CENTROIDS]
@@ -1002,19 +973,13 @@ def _ivf_index_lifecycle(
             _TOPK_K,
             floor=_A16_RECALL_FLOOR,
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def c69_ivf_index_serve(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
-    return _ivf_index_lifecycle(spark, sf_dir, reliable_pins=reliable_pins)
+def c69_ivf_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ivf_index_lifecycle(spark, sf_dir)
 
 
 def _c69_sql() -> str:

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import load_table
 
@@ -45,9 +46,7 @@ _C70_DELTA_MOD, _C70_DELTA_REM = 10, 5
 _C70_BUCKETS = 8
 
 
-def c70_minhash_index_serve(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
+def c70_minhash_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the corpus' banded-MinHash signature index once (bucketed
     table), then dedup the delta against it without re-shingling the
     corpus.  Output: the (a, b, jaccard) near-dup pairs involving at
@@ -62,16 +61,11 @@ def c70_minhash_index_serve(
     is 8 narrow rows per document -- persisting it costs ~1% of the
     corpus text it spares every day.
     """
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
     import shutil
     import tempfile
 
     from ..operators.dedup import minhash_band_index, serve_minhash_band_index
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .analytics import _MH_BANDS, _MH_N, _MH_SHINGLE, _MH_THRESHOLD
 
     d = load_table(spark, sf_dir, "documents")
@@ -107,9 +101,8 @@ def c70_minhash_index_serve(
             num_hashes=_MH_N,
             bands=_MH_BANDS,
             threshold=_MH_THRESHOLD,
-            reliable_pins=reliable_pins,
         )
-        return freeze_result(out)  # pre-DROP/rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-DROP/rmtree, executor-side
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_c70_minhash_index")
         shutil.rmtree(scratch, ignore_errors=True)
@@ -218,7 +211,6 @@ def _a213_hashes(docs: DataFrame) -> DataFrame:
 
 def a213_phash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import hash64_band_pairs
-    from ..operators.ordering import pin_frame
 
     ah = pin_frame(  # feeds both sides of the band join
         _a213_hashes(load_table(spark, sf_dir, "documents"))
@@ -349,7 +341,6 @@ def a214_audio_fingerprint_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..operators.dedup import hash64_band_pairs
-    from ..operators.ordering import pin_frame
 
     ah = pin_frame(  # feeds both sides of the band join
         _a214_hashes(load_table(spark, sf_dir, "documents"))

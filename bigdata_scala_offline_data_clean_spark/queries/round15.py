@@ -65,6 +65,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame, run_concurrently
 from . import QuerySpec
 from ._util import load_table
 
@@ -85,9 +86,7 @@ _C71_ERASE_REM = 7
 _C71_BUCKETS = 8
 
 
-def c71_minhash_index_erase(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
+def c71_minhash_index_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full incremental-index lifecycle including the DELETE verb:
     build the corpus band index, absorb day-1, tombstone-erase a doc
     set, serve day-2 against the live index.  Output: the (a, b,
@@ -101,16 +100,11 @@ def c71_minhash_index_erase(
     runs first so the serve demonstrably honors BOTH pending states --
     multiple file generations AND tombstones -- at once.
     """
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
     import shutil
     import tempfile
 
     from ..operators.dedup import minhash_band_index, serve_minhash_band_index
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .analytics import _MH_BANDS, _MH_N, _MH_SHINGLE, _MH_THRESHOLD
 
     d = load_table(spark, sf_dir, "documents")
@@ -131,16 +125,7 @@ def c71_minhash_index_erase(
             buckets=_C71_BUCKETS,
             sort_cols=["band_id", "band_sig"],
         )
-        # ERASE overlaps the build+absorb chain (r18, guide §2.6): the
-        # tombstone append writes only the side table, which nothing
-        # reads until the serve below
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_tomb = pool.submit(
-                wh.append_tombstones, erased.select("doc_id"),
-                "dwd", "c71_idx",
-            )
+        def build_and_absorb() -> None:
             # BUILD (amortized once at 100 TB)
             wh.write_bucketed(
                 minhash_band_index(day0, **kw), "dwd", "c71_idx", **spec
@@ -150,7 +135,16 @@ def c71_minhash_index_erase(
                 minhash_band_index(day1, **kw),
                 "dwd", "c71_idx", **spec, mode="append",
             )
-            f_tomb.result()
+
+        # ERASE overlaps the build+absorb chain (r18, guide §2.6): the
+        # tombstone append writes only the side table, which nothing
+        # reads until the serve below
+        run_concurrently(
+            lambda: wh.append_tombstones(
+                erased.select("doc_id"), "dwd", "c71_idx"
+            ),
+            build_and_absorb,
+        )
         # SERVE day 2 against the LIVE index (broadcast anti-join over
         # the bucketed scan -- still zero index-side exchanges)
         out = serve_minhash_band_index(
@@ -158,10 +152,9 @@ def c71_minhash_index_erase(
             delta,
             live_corpus,
             threshold=_MH_THRESHOLD,
-            reliable_pins=reliable_pins,
             **kw,
         )
-        return freeze_result(out)  # pre-DROP/rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-DROP/rmtree, executor-side
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_c71_idx")
         shutil.rmtree(scratch, ignore_errors=True)
@@ -197,9 +190,7 @@ _C72_MOD, _C72_DELTA_REM = 10, 8  # >= 1 delta-involved a213 pair at
 _C72_BUCKETS = 8
 
 
-def c72_phash_index_serve(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
+def c72_phash_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the corpus' average-hash band index once (bucketed on the
     (band, val) join key), then dedup the delta's images against it:
     (a, b, hamming) near-dup pairs with at least one delta side.
@@ -212,16 +203,11 @@ def c72_phash_index_serve(
     exchanges off its bucket spec; the delta side shuffles its 4 rows
     per new document.
     """
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
     import shutil
     import tempfile
 
     from ..operators.dedup import hash64_band_rows, serve_hash64_band_index
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .round14 import _A213_MAX_HAMMING, _a213_hashes
 
     d = load_table(spark, sf_dir, "documents")
@@ -248,9 +234,8 @@ def c72_phash_index_serve(
             wh.bucketed_table("dwd", "c72_phash_index"),
             _a213_hashes(delta),
             _A213_MAX_HAMMING,
-            reliable_pins=reliable_pins,
         )
-        return freeze_result(out)  # pre-DROP/rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-DROP/rmtree, executor-side
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_c72_phash_index")
         shutil.rmtree(scratch, ignore_errors=True)
@@ -296,13 +281,7 @@ QUERIES["c72_phash_index_serve"] = QuerySpec(
 _C73_ERASE_MOD, _C73_ERASE_REM = 25, 7
 
 
-def c73_ivf_index_erase_serve(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
+def c73_ivf_index_erase_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .round13 import _ivf_index_lifecycle
 
     return _ivf_index_lifecycle(
@@ -310,7 +289,6 @@ def c73_ivf_index_erase_serve(
         sf_dir,
         erase_mod=_C73_ERASE_MOD,
         erase_rem=_C73_ERASE_REM,
-        reliable_pins=reliable_pins,
     )
 
 
@@ -362,7 +340,6 @@ def s17_stream_index_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import minhash_band_index, serve_minhash_band_index
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .analytics import _MH_BANDS, _MH_N, _MH_SHINGLE, _MH_THRESHOLD
 
     d = load_table(spark, sf_dir, "documents")
@@ -407,18 +384,10 @@ def s17_stream_index_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "append"
                 ).parquet(src)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [
-                pool.submit(build_index), pool.submit(write_arrivals)
-            ]:
-                f.result()
+        run_concurrently(build_index, write_arrivals)
         results = f"{scratch}/served"
 
         def serve_then_absorb(batch: DataFrame, batch_id: int) -> None:
-            from concurrent.futures import ThreadPoolExecutor
-
             # Round 18 (guide §1.2 + §2.6): the batch's band rows feed
             # BOTH the serve's index join and the absorb append -- one
             # EAGER pin computes the Arrow band pass once (the lazy
@@ -431,9 +400,7 @@ def s17_stream_index_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
             # freshly-appended rows can only produce within-batch pairs
             # the serve's delta self-join already emits (then distinct),
             # and the corpus-text fetch anti-joins the batch ids out.
-            bands = minhash_band_index(batch, **kw).localCheckpoint(
-                eager=True
-            )
+            bands = pin_frame(minhash_band_index(batch, **kw), eager=True)
 
             def serve() -> None:
                 # corpus_texts is plain `d`: the serve only touches it
@@ -455,10 +422,7 @@ def s17_stream_index_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
                     bands, "dwd", "s17_idx", **spec, mode="append"
                 )
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(serve), pool.submit(absorb)]
-                for f in futs:
-                    f.result()
+            run_concurrently(serve, absorb)
 
         stream = (
             spark.readStream.schema("doc_id bigint, text string")
@@ -477,7 +441,7 @@ def s17_stream_index_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(results)
             .distinct()
         )
-        return freeze_result(out)  # pre-DROP/rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-DROP/rmtree, executor-side
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_s17_idx")
         shutil.rmtree(scratch, ignore_errors=True)
@@ -525,7 +489,6 @@ def a215_neardup_percolation_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..operators.dedup import connected_components
-    from ..operators.ordering import pin_frame
     from ..operators.similarity import embedding_neardup_pairs
     from .analytics import _ND_THRESHOLD
 
@@ -730,7 +693,6 @@ def c74_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import hash64_band_rows, minhash_band_index
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .analytics import _MH_BANDS, _MH_N, _MH_SHINGLE
     from .round14 import _a213_hashes
 
@@ -748,8 +710,6 @@ def c74_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # BUILD all three indexes (amortized at 100 TB; real here so the
         # audit counts actual storage) -- independent writes to disjoint
         # tables/paths, run concurrently (guide §2.6, the c77 pattern)
-        from concurrent.futures import ThreadPoolExecutor
-
         from ..operators.similarity import argmin_struct_sql, l2_fold_sql
         from .quantizers import A16_CENTROIDS
 
@@ -781,13 +741,7 @@ def c74_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("vec_id").alias("n_id"), cell.alias("cell")
             ).write.partitionBy("cell").parquet(f"{scratch}/c74_ivf")
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [
-                pool.submit(build_text),
-                pool.submit(build_phash),
-                pool.submit(build_ivf),
-            ]:
-                fut.result()
+        run_concurrently(build_text, build_phash, build_ivf)
 
         def before_and_hit(t: DataFrame) -> tuple[int, int]:
             # one pass for rows_before + rows_erased (r17, guide §1.2):
@@ -841,21 +795,13 @@ def c74_index_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the three erasure legs touch disjoint tables/paths -- run them
         # as concurrent driver jobs (guide §2.6, the c77 pattern);
         # results collected in fixed order, output unchanged
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(text_leg),
-                pool.submit(phash_leg),
-                pool.submit(ivf_leg),
-            ]
-            rows = [f.result() for f in futs]
+        rows = run_concurrently(text_leg, phash_leg, ivf_leg)
         out = spark.createDataFrame(
             rows,
             "index_name string, layout string, verb string, "
             "rows_before bigint, rows_erased bigint, rows_after bigint",
         )
-        return freeze_result(out)
+        return pin_frame(out, eager=True)
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_c74_text")
         spark.sql("DROP TABLE IF EXISTS dwd_c74_phash")
@@ -922,24 +868,16 @@ _C75_MOD, _C75_DELTA_REM = 10, 6  # >= 15 delta-involved pairs at every
 # test SF (29 / 33 / 360 at sf0.001/0.01/0.1, tau = _SD_COS)
 
 
-def c75_semdedup_index_serve(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
+def c75_semdedup_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.ordering import pin_frame
     from ..operators.similarity import (
         _norm,
         argmin_struct_sql,
         dot_product,
         l2_fold_sql,
     )
-    from ._util import freeze_result
     from .quantizers import A209_CENTROIDS
     from .round13 import _SD_COS
 
@@ -969,8 +907,7 @@ def c75_semdedup_index_serve(
                 F.col("embedding").alias("__d_vec"),
                 _norm(F.col("embedding")).alias("__d_norm"),
                 cell.alias("cell"),
-            ),
-            reliable=reliable_pins,
+            )
         )
         # probed-cell list: bounded driver fetch (<= k ints) so the
         # IN-filter is a PLAN LITERAL the scan prunes partitions with
@@ -1014,7 +951,7 @@ def c75_semdedup_index_serve(
                 cos_dd.alias("cosine"),
             )
         )
-        return freeze_result(cross.unionByName(within))  # pre-rmtree
+        return pin_frame(cross.unionByName(within), eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -52,6 +52,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame, run_concurrently
 from . import QuerySpec
 from ._util import load_table
 
@@ -282,7 +283,7 @@ QUERIES["a217_tau_calibration"] = QuerySpec(a217_tau_calibration, _a217_sql())
 #
 # A compaction that drops live rows, resurrects erased ones, fails to
 # collapse the generations, or leaves tombstones pending breaks the
-# exact match.  Scale: the rewrite is executor-side (localCheckpoint
+# exact match.  Scale: the rewrite is executor-side (eager pin_frame
 # freeze -> repartition -> bucketed overwrite), never a driver
 # materialization; erase stays O(|erased|); the serve is c70's
 # zero-index-side-exchange shape (pytest-pinned in test_round15.py).
@@ -296,19 +297,12 @@ _C76_BUCKETS = 4
 _C76_GENERATIONS = 3  # build + two absorbs
 
 
-def c76_compaction_lifecycle(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
+def c76_compaction_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
     from ..operators.dedup import minhash_band_index, serve_minhash_band_index
     from ..sources.catalog import Warehouse
-    from ._util import freeze_result
     from .analytics import _MH_BANDS, _MH_N, _MH_SHINGLE, _MH_THRESHOLD
 
     d = load_table(spark, sf_dir, "documents")
@@ -338,16 +332,7 @@ def c76_compaction_lifecycle(
     scratch = tempfile.mkdtemp(prefix="ods_spark_c76_")
     try:
         wh = Warehouse(spark, scratch)
-        # the tombstone append writes only the side table -- overlap it
-        # with the build + absorb chain (r18, guide §2.6; the c71/c77
-        # pattern), then take the two pre-compaction censuses
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_tomb = pool.submit(
-                wh.append_tombstones, erased.select("doc_id"),
-                "dwd", "c76_idx",
-            )
+        def build_and_absorb() -> None:
             wh.write_bucketed(
                 one_file_per_bucket(minhash_band_index(day0, **kw)),
                 "dwd", "c76_idx", **spec,
@@ -357,7 +342,16 @@ def c76_compaction_lifecycle(
                     one_file_per_bucket(minhash_band_index(gen, **kw)),
                     "dwd", "c76_idx", **spec, mode="append",
                 )
-            f_tomb.result()
+
+        # the tombstone append writes only the side table -- overlap it
+        # with the build + absorb chain (r18, guide §2.6; the c71/c77
+        # pattern), then take the two pre-compaction censuses
+        run_concurrently(
+            lambda: wh.append_tombstones(
+                erased.select("doc_id"), "dwd", "c76_idx"
+            ),
+            build_and_absorb,
+        )
         files_before = wh.data_file_count("dwd", "c76_idx")
         tomb_before = wh.tombstones("dwd", "c76_idx").count()
         compacted, _, files_after = wh.maybe_compact_bucketed(
@@ -370,7 +364,6 @@ def c76_compaction_lifecycle(
             delta,
             live_corpus,
             threshold=_MH_THRESHOLD,
-            reliable_pins=reliable_pins,
             **kw,
         )
         out = served.agg(F.count(F.lit(1)).alias("served_pairs")).select(
@@ -381,7 +374,7 @@ def c76_compaction_lifecycle(
             F.lit(tomb_after).cast("bigint").alias("tombstones_after"),
             F.col("served_pairs"),
         )
-        return freeze_result(out)  # pre-DROP/rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-DROP/rmtree, executor-side
     finally:
         spark.sql("DROP TABLE IF EXISTS dwd_c76_idx")
         shutil.rmtree(scratch, ignore_errors=True)
@@ -727,8 +720,6 @@ def s18_stream_tau_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ._util import freeze_result
-
     e = load_table(spark, sf_dir, "embeddings")
     scratch = tempfile.mkdtemp(prefix="ods_spark_s18_")
     try:  # owns the scratch from mkdtemp on -- a failed slice write or
@@ -754,7 +745,7 @@ def s18_stream_tau_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if os.path.isdir(sample_dir)
                 else None
             )
-            top = _s18_merge_sample(cur, batch).localCheckpoint(eager=True)
+            top = pin_frame(_s18_merge_sample(cur, batch), eager=True)
             top.coalesce(1).write.mode("overwrite").parquet(sample_dir)
 
         q = (
@@ -784,7 +775,7 @@ def s18_stream_tau_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(s_cap)
         )
         out = _calibration_row(sample, n, s_cap)
-        return freeze_result(out)  # pre-rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-rmtree, executor-side
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

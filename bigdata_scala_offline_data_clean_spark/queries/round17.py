@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame, run_concurrently
 from . import QuerySpec
 from ._util import load_table
 
@@ -436,7 +437,6 @@ def _a221_frame_hashes(docs: DataFrame) -> DataFrame:
 
 def a221_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import hamming64_sql
-    from ..operators.ordering import pin_frame
 
     fh = pin_frame(  # feeds the band join AND the per-frame verify
         _a221_frame_hashes(load_table(spark, sf_dir, "documents"))
@@ -602,13 +602,7 @@ _C77_ERASE_REM = 7   # erasure subjects: tombstoned / physically erased
 _C77_BUCKETS = 4
 
 
-def c77_nightly_index_lifecycle(
-    spark: SparkSession, sf_dir: str, *, reliable_pins: bool | None = None
-) -> DataFrame:
-    if reliable_pins is None:  # production default: reliable iff a
-        from ..operators.ordering import auto_reliable_pins
-
-        reliable_pins = auto_reliable_pins(spark)  # checkpoint dir is set
+def c77_nightly_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
@@ -618,7 +612,6 @@ def c77_nightly_index_lifecycle(
         serve_hash64_band_index,
         serve_minhash_band_index,
     )
-    from ..operators.ordering import pin_frame
     from ..operators.similarity import (
         _norm,
         argmin_struct_sql,
@@ -684,15 +677,11 @@ def c77_nightly_index_lifecycle(
                     F.count(F.lit(1)).alias("b"), F.count("__er").alias("e")
                 ).collect()[0]
 
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=3) as lp:
-                f_census = lp.submit(census)
-                f_tomb = lp.submit(wh.append_tombstones, d_erase, "dwd", name)
-                f_files = lp.submit(wh.data_file_count, "dwd", name)
-                built_erased = f_census.result()
-                f_tomb.result()
-                files_before = f_files.result()
+            built_erased, _, files_before = run_concurrently(
+                census,
+                lambda: wh.append_tombstones(d_erase, "dwd", name),
+                lambda: wh.data_file_count("dwd", name),
+            )
             rows_built, rows_erased = built_erased["b"], built_erased["e"]
             compacted, _, files_after = wh.maybe_compact_bucketed(
                 "dwd", name, **spec, max_files_per_bucket=1
@@ -722,7 +711,6 @@ def c77_nightly_index_lifecycle(
                 d_delta,
                 d_live,
                 threshold=_MH_THRESHOLD,
-                reliable_pins=reliable_pins,
                 **kw,
             ).count()
             return (
@@ -741,7 +729,6 @@ def c77_nightly_index_lifecycle(
                 wh.read_bucketed_live("dwd", "c77_phash"),
                 _a213_hashes(d_delta),
                 _A213_MAX_HAMMING,
-                reliable_pins=reliable_pins,
             ).count()
             return (
                 "phash_bands", "bucketed(band,val)", *stats, served, None,
@@ -789,23 +776,13 @@ def c77_nightly_index_lifecycle(
 
             # r18 (guide §2.6): the three pre-erase censuses are
             # independent reads -- overlap them before the erase rewrite
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=3) as lp:
-                f_rows = lp.submit(
-                    lambda: spark.read.parquet(ipath).count()
-                )
-                f_files = lp.submit(
-                    lambda: sum(
-                        wh.partition_file_census(
-                            "", "c77_ivf", "cell"
-                        ).values()
-                    )
-                )
-                f_erased = lp.submit(v_erase.count)
-                rows_built = f_rows.result()
-                files_before = f_files.result()
-                rows_erased = f_erased.result()
+            rows_built, files_before, rows_erased = run_concurrently(
+                lambda: spark.read.parquet(ipath).count(),
+                lambda: sum(
+                    wh.partition_file_census("", "c77_ivf", "cell").values()
+                ),
+                v_erase.count,
+            )
             wh.erase_partition_rows("", "c77_ivf", "cell", v_erase, "c_id")
             compacted_cells = wh.compact_partitions("", "c77_ivf", "cell")
             files_after = sum(
@@ -821,8 +798,7 @@ def c77_nightly_index_lifecycle(
                     F.col("embedding").alias("__d_vec"),
                     _norm(F.col("embedding")).alias("__d_norm"),
                     cell.alias("cell"),
-                ),
-                reliable=reliable_pins,
+                )
             )
             cells = sorted({r["cell"] for r in dv.select("cell").collect()})
             idx = (
@@ -862,15 +838,7 @@ def c77_nightly_index_lifecycle(
                 len(compacted_cells) > 0, served, tau,
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(text_leg),
-                pool.submit(phash_leg),
-                pool.submit(vector_leg),
-            ]
-            rows = [f.result() for f in futs]
+        rows = run_concurrently(text_leg, phash_leg, vector_leg)
 
         return spark.createDataFrame(
             rows,

@@ -29,8 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import day_str, freeze_result, load_table, ts_str
+from ._util import day_str, load_table, ts_str
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -582,7 +583,7 @@ def s11_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("pos") <= _S11_K)
             .select("event_type", "pos", "user_id", "n_events")
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -39,8 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table
+from ._util import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -660,7 +661,7 @@ def s12_stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (F.col("cms_est") >= F.col("exact_n")).alias("cms_ok"),
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -738,9 +739,10 @@ def c43_bitmap_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint = the "store partials" step: the event scan runs
     # exactly once, and the three rollup merges below read the KB-scale
     # materialized partials (in production they read the warehouse table)
-    partials = bitmap_distinct_partials(
-        e, ["event_type"], "day", "user_id"
-    ).localCheckpoint(eager=True)
+    partials = pin_frame(
+        bitmap_distinct_partials(e, ["event_type"], "day", "user_id"),
+        eager=True,
+    )
 
     by_type = merge_bitmap_distinct(partials, ["event_type"]).select(
         F.lit("by_type").alias("level"),

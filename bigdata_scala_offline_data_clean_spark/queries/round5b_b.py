@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table
+from ._util import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -238,7 +239,7 @@ def c44_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_updated",
             )
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

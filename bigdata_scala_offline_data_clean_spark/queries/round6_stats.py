@@ -22,8 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table
+from ._util import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -541,7 +542,7 @@ def s13_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         # identical scoring to a122, fed by the streamed partials instead
         # of a batch scan -- one shared helper, one shared oracle
         out = _score_daily_anomaly(daily)
-        return freeze_result(out)  # pre-rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-rmtree, executor-side
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -16,8 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table
+from ._util import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -56,15 +57,19 @@ def a118_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders groupBy through each other's lineage.
     from ..operators.ordering import distributed_ntile
 
-    per_cust = per_cust.localCheckpoint(eager=False)
-    tiled = distributed_ntile(
-        per_cust, _A118_Q, "recency_days", tie_cols=["o_custkey"],
-        tile_col="r_q",
-    ).localCheckpoint(eager=False)
-    tiled = distributed_ntile(
-        tiled, _A118_Q, "frequency", ascending=False,
-        tie_cols=["o_custkey"], tile_col="f_q",
-    ).localCheckpoint(eager=False)
+    per_cust = pin_frame(per_cust)
+    tiled = pin_frame(
+        distributed_ntile(
+            per_cust, _A118_Q, "recency_days", tie_cols=["o_custkey"],
+            tile_col="r_q",
+        )
+    )
+    tiled = pin_frame(
+        distributed_ntile(
+            tiled, _A118_Q, "frequency", ascending=False,
+            tie_cols=["o_custkey"], tile_col="f_q",
+        )
+    )
     tiled = distributed_ntile(
         tiled, _A118_Q, "monetary", ascending=False,
         tie_cols=["o_custkey"], tile_col="m_q",
@@ -1093,7 +1098,7 @@ def c56_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        return freeze_result(out)  # pre-rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-rmtree, executor-side
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -37,8 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import dsum, freeze_result, load_table
+from ._util import dsum, load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -624,7 +625,7 @@ def s14_stream_psi(
             cur.agg(F.count(F.lit(1)).alias("nc"))
         )
         out = _psi_report(n_base, n_cur, tot)
-        return freeze_result(out)  # pre-rmtree, executor-side
+        return pin_frame(out, eager=True)  # pre-rmtree, executor-side
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

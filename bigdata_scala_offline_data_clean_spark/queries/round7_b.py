@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import dsum, load_table
 
@@ -39,9 +40,7 @@ def a151_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the split frame feeds 5 consumers and the 8-gram explode feeds 2 --
     # checkpoint both so the scan+md5 and the shingle Generate run once
     # (the a118/distributed_ntile shared-frame discipline)
-    s = hash_split(d, {"train": 0.9, "test": 0.1}).localCheckpoint(
-        eager=False
-    )
+    s = pin_frame(hash_split(d, {"train": 0.9, "test": 0.1}))
     dig = s.select("doc_id", "split", F.md5("text").alias("dg"))
     tr_dg = dig.where(F.col("split") == "train").select("dg").distinct()
     te_dg = dig.where(F.col("split") == "test")
@@ -50,9 +49,7 @@ def a151_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_test_exact_dup"))
     )
     sh = shingles(s, "doc_id", "text", _A151_N)
-    sh = sh.join(s.select("doc_id", "split"), "doc_id").localCheckpoint(
-        eager=False
-    )
+    sh = pin_frame(sh.join(s.select("doc_id", "split"), "doc_id"))
     tr_g = sh.where(F.col("split") == "train").select("gram").distinct()
     te_hit = (
         sh.where(F.col("split") == "test")

@@ -44,6 +44,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import load_table
 
@@ -61,7 +62,7 @@ _DEC = "decimal(28,9)"
 
 
 def a157_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ordering import grouped_exact_percentiles, pin_frame
+    from ..operators.ordering import grouped_exact_percentiles
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -336,11 +337,7 @@ def c60_join_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint: exact_percentiles runs three jobs over its input
         # and the stats agg below is a fourth -- without the pin each
         # would re-derive this fact-table shuffle (round-9 review fix)
-        sizes = (
-            df.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=False)
-        )
+        sizes = pin_frame(df.groupBy(key).agg(F.count(F.lit(1)).alias("n")))
         pct = exact_percentiles(sizes, "n", [0.5, 0.99])
         parts.append(
             sizes.agg(

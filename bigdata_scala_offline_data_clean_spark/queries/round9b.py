@@ -54,8 +54,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table
+from ._util import load_table
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -394,7 +395,7 @@ QUERIES["a168_cross_source_leakage"] = QuerySpec(
 def a169_embedding_norm_outliers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.ordering import grouped_exact_percentiles, pin_frame
+    from ..operators.ordering import grouped_exact_percentiles
     from ..operators.similarity import l2_norm
 
     # pin both multi-consumer frames (r17, guide §1.2 -- the a157
@@ -1131,7 +1132,7 @@ def s15_stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_count",
             F.round(F.col("true_count") + noise, 6).alias("noisy_count"),
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

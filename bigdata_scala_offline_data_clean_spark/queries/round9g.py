@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
 from ._util import hash_uniform, hash_uniform_sql, load_table
 
@@ -246,10 +247,10 @@ def a197_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
     ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.groupBy(F.date_trunc("day", "ts").alias("__d"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)  # feeds mu, the denom, and 7 joins
+    daily = pin_frame(  # feeds mu, the denom, and 7 joins
+        ev.groupBy(F.date_trunc("day", "ts").alias("__d")).agg(
+            F.count(F.lit(1)).alias("__n")
+        )
     )
     mu_den = daily.crossJoin(
         F.broadcast(

@@ -8,8 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
 from . import QuerySpec
-from ._util import freeze_result, load_table, ts_str
+from ._util import load_table, ts_str
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,7 +302,7 @@ def s07_stream_scd1_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = wh.table("dwd", "dim_user_last_event").select(
             "user_id", "event_id", "event_type", "value", "ts"
         )
-        return freeze_result(back)  # pre-rmtree
+        return pin_frame(back, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -416,7 +417,7 @@ def s09_stream_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -463,7 +464,7 @@ def s10_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = merge_bitmap_distinct(spark.read.parquet(store), ["event_type"])
-        return freeze_result(out)  # pre-rmtree
+        return pin_frame(out, eager=True)  # pre-rmtree
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

@@ -41,11 +41,12 @@ def build_session(
     Parameters default from environment for the driver harness:
     ``SPARK_GRAFT_CPUS`` sets local parallelism, otherwise ``local[*]``.
 
-    ``checkpoint_dir`` (or ``SPARK_GRAFT_CHECKPOINT_DIR``) enables
-    RELIABLE ``DataFrame.checkpoint()`` -- replicated-storage pins that
-    survive executor loss, unlike ``localCheckpoint``.  On a cluster
-    point it at HDFS/S3; operators taking ``reliable=True``
-    (``ordering.grouped_exact_percentiles`` and friends) require it.
+    ``checkpoint_dir`` (or ``SPARK_GRAFT_CHECKPOINT_DIR``) sets the
+    pin policy, with one rule: **a checkpoint dir means every pin is
+    replicated and eager.**  Every ``ordering.pin_frame`` then writes a
+    ``DataFrame.checkpoint(eager=True)`` there, which survives executor
+    loss; with no dir every pin is a non-replicated ``localCheckpoint``.
+    On a cluster point it at HDFS/S3.  There is no per-call override.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:

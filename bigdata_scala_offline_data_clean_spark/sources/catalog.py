@@ -33,6 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordering import pin_frame
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -251,6 +253,12 @@ class Warehouse:
         step: new rows land in additional files per bucket under the
         SAME spec, so later joins still ride it -- how c70's band index
         absorbs each day's accepted delta without a rebuild.
+
+        ``df`` may belong to another session (a streaming micro-batch
+        runs in a clone of the query's session), whose write leaves this
+        warehouse's session reading the table's old file listing.  The
+        table is refreshed in ``self.spark`` after every write, so the
+        next :meth:`bucketed_table` sees the rows just written.
         """
         name = f"{layer}_{table}"
         writer = (
@@ -261,6 +269,7 @@ class Warehouse:
         if sort_cols:
             writer = writer.sortBy(*sort_cols)
         writer.option("path", self.path(layer, table)).saveAsTable(name)
+        self.spark.catalog.refreshTable(name)
         return name
 
     def bucketed_table(self, layer: str, table: str) -> DataFrame:
@@ -357,8 +366,8 @@ class Warehouse:
         changes is the physical layout -- per-bucket file count back to
         1 and the anti-join gone.  The rewrite reads the table it
         replaces, so the live rows are frozen executor-side first
-        (eager ``localCheckpoint``, the ``freeze_result`` pattern) --
-        never a driver materialization.  The frozen rows are then
+        (an eager :func:`~..operators.ordering.pin_frame`) -- never a
+        driver materialization.  The frozen rows are then
         repartitioned INTO the bucket layout (``repartition(buckets,
         cols)`` hashes exactly like the bucket spec), so each write task
         holds exactly one bucket and the table lands at ONE file per
@@ -368,18 +377,20 @@ class Warehouse:
         unchanged, so serves before and after plan identically.
 
         Durability caveat (ADVICE r15): the rewrite overwrites the
-        table it read, protected only by an eager ``localCheckpoint``
-        whose blocks live in NON-REPLICATED executor storage -- an
-        executor loss between the overwrite's delete and rewrite loses
-        the index with no recovery path, unlike the Delta/Iceberg
-        snapshot swap this emulates.  Acceptable in local mode and for
-        any index that is (cheaply) rebuildable from the corpus; a
-        production deployment schedules it off-peak with the source
-        corpus retained, or writes to a temp table and swaps (the
-        plain-parquet catalog here has no atomic rename-over-table, so
-        the swap variant is deliberately not faked)."""
-        live = self.read_bucketed_live(layer, table, id_col).localCheckpoint(
-            eager=True
+        table it read, protected only by the pin.  With no checkpoint
+        dir set the pin's blocks live in NON-REPLICATED executor storage
+        -- an executor loss between the overwrite's delete and rewrite
+        loses the index with no recovery path, unlike the Delta/Iceberg
+        snapshot swap this emulates.  With a checkpoint dir set the pin
+        is a replicated checkpoint and the frozen rows survive the loss;
+        a failure of the write itself still leaves no old snapshot to
+        fall back to.  A production deployment sets the dir, schedules
+        the rewrite off-peak with the source corpus retained, or writes
+        to a temp table and swaps (the plain-parquet catalog here has no
+        atomic rename-over-table, so the swap variant is deliberately
+        not faked)."""
+        live = pin_frame(
+            self.read_bucketed_live(layer, table, id_col), eager=True
         )
         self.write_bucketed(
             live.repartition(buckets, *[F.col(c) for c in bucket_cols]),
@@ -454,7 +465,7 @@ class Warehouse:
         keep serving stale rows.  Integer values render identically in
         both directions; anything else raises.  Shares
         :meth:`compact_bucketed`'s non-atomic-overwrite durability
-        caveat (localCheckpoint freeze, no snapshot swap)."""
+        caveat (eager-pin freeze, no snapshot swap)."""
         path = self.path(layer, table)
         t = self.spark.read.parquet(path)
         part_type = dict(t.dtypes).get(part_col)
@@ -480,11 +491,11 @@ class Warehouse:
         )
         if not affected:
             return []
-        kept = (
+        kept = pin_frame(  # freeze: we overwrite our source
             t.where(F.col(part_col).isin(affected))
             .join(eids, id_col, "left_anti")
-            .repartition(F.col(part_col))  # one file per rewritten cell
-            .localCheckpoint(eager=True)  # freeze: we overwrite our source
+            .repartition(F.col(part_col)),  # one file per rewritten cell
+            eager=True,
         )
         kept.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
@@ -586,7 +597,7 @@ class Warehouse:
         Shares :meth:`erase_partition_rows`'s integral-partition-column
         restriction (the census parses directory names) and
         :meth:`compact_bucketed`'s non-atomic-overwrite durability
-        caveat (localCheckpoint freeze, no snapshot swap)."""
+        caveat (eager-pin freeze, no snapshot swap)."""
         path = self.path(layer, table)
         t = self.spark.read.parquet(path)
         part_type = dict(t.dtypes).get(part_col)
@@ -603,9 +614,8 @@ class Warehouse:
         )
         if not affected:
             return []
-        frozen = (
-            t.where(F.col(part_col).isin(affected))
-            .localCheckpoint(eager=True)  # freeze: we overwrite our source
+        frozen = pin_frame(  # freeze: we overwrite our source
+            t.where(F.col(part_col).isin(affected)), eager=True
         )
         # hash-repartition on the partition column: every cell lands
         # wholly in one task, and the writer splits per partition dir,

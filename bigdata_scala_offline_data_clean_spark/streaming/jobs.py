@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.etl import stamp_audit
+from ..operators.ordering import pin_frame
 
 
 def stream_append_clean(
@@ -285,7 +286,7 @@ def stream_upsert_scd1(
             etl_date=etl_date or "latest", layer=layer,
         )
         # materialize before overwriting the directory being read
-        merged = merged.localCheckpoint(eager=True)
+        merged = pin_frame(merged, eager=True)
         warehouse.overwrite_table(merged, layer, table)
 
     return stream_df.writeStream.foreachBatch(merge_batch)

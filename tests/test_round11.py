@@ -126,14 +126,11 @@ def test_trained_ivf_recall_floor_sf001(spark):
 
 
 def test_reliable_checkpoint_percentiles_identical(spark, tmp_path):
-    """VERDICT r10 task #4: the reliable-checkpoint escape hatch.  The
-    same grouped percentile query pinned via localCheckpoint (default)
-    and via replicated checkpoint() (reliable=True) must produce
-    identical rows; reliable=True without a checkpoint dir fails loudly
-    up front."""
+    """The same grouped percentile query pinned via localCheckpoint (no
+    checkpoint dir) and via replicated checkpoint() (a dir set, which is
+    what switches every pin_frame) must produce identical rows."""
     from bigdata_scala_offline_data_clean_spark.operators.ordering import (
         grouped_exact_percentiles,
-        pin_frame,
     )
 
     df = spark.createDataFrame(
@@ -141,26 +138,23 @@ def test_reliable_checkpoint_percentiles_identical(spark, tmp_path):
     )
     qs = [0.25, 0.5, 0.9]
 
-    # no checkpoint dir configured -> loud, actionable error.  Guarded
-    # (review fix): the session-scoped fixture is shared, so another test
-    # may legitimately have set a dir already; only assert the error when
-    # the precondition actually holds, instead of coupling to test order.
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            pin_frame(df, reliable=True)
-
-    local = sorted(
-        map(tuple, grouped_exact_percentiles(df, ["g"], "v", qs).collect())
-    )
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    rel = sorted(
-        map(
-            tuple,
-            grouped_exact_percentiles(
-                df, ["g"], "v", qs, reliable=True
-            ).collect(),
+    def rows():
+        return sorted(
+            map(tuple, grouped_exact_percentiles(df, ["g"], "v", qs).collect())
         )
-    )
+
+    sc = spark.sparkContext
+    prior = sc.getCheckpointDir()  # other tests may have set one
+    try:
+        sc._jsc.setCheckpointDir(None)
+        local = rows()
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        rel = rows()
+    finally:
+        if prior is None:
+            sc._jsc.setCheckpointDir(None)
+        else:
+            sc.setCheckpointDir(prior)
     assert rel == local
 
 

@@ -83,10 +83,9 @@ def test_argmin_struct_fold_matches_array_position_under_ties(spark):
 
 
 def test_c69_reliable_pins_identical(spark, tmp_path):
-    """VERDICT r13 task #5: composite pipelines must offer replicated
-    stage pins for cluster runs.  c69 with reliable_pins=True (routed
-    through a configured checkpoint dir) returns the identical answer
-    to the default localCheckpoint path."""
+    """Composite pipelines pin through replicated checkpoints when the
+    session has a checkpoint dir: c69 with a dir set returns the
+    identical answer to the localCheckpoint path with none."""
     from bigdata_scala_offline_data_clean_spark.queries.round13 import (
         c69_ivf_index_serve,
     )
@@ -95,25 +94,22 @@ def test_c69_reliable_pins_identical(spark, tmp_path):
     if not os.path.exists(f"{sf}/embeddings.parquet"):
         pytest.skip("testdata not present")
     key = lambda r: tuple(r)  # noqa: E731
-    local = sorted(map(key, c69_ivf_index_serve(spark, sf).collect()))
-    had_dir = spark.sparkContext.getCheckpointDir() is not None
-    if not had_dir:
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    prior = sc.getCheckpointDir()  # other tests may have set one
     try:
-        rel = sorted(
-            map(
-                key,
-                c69_ivf_index_serve(spark, sf, reliable_pins=True).collect(),
-            )
-        )
+        sc._jsc.setCheckpointDir(None)
+        local = sorted(map(key, c69_ivf_index_serve(spark, sf).collect()))
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        rel = sorted(map(key, c69_ivf_index_serve(spark, sf).collect()))
     finally:
-        if not had_dir:
-            # restore the session-global to unset (ADVICE r14): the
-            # installed dir points into this test's tmp_path, which
-            # pytest may delete -- later reliable=True paths in the
-            # shared session must see their own missing-dir error, not
-            # a dangling directory.  None -> Scala null -> unset.
-            spark.sparkContext.setCheckpointDir(None)
+        # restore the session-global (ADVICE r14): the installed dir
+        # points into this test's tmp_path, which pytest may delete --
+        # later pins in the shared session must not write into a
+        # dangling directory.  None -> Scala null -> unset.
+        if prior is None:
+            sc._jsc.setCheckpointDir(None)
+        else:
+            sc.setCheckpointDir(prior)
     assert rel == local
 
 

@@ -453,6 +453,44 @@ def test_s17_output_invariant_to_batch_split(spark, monkeypatch):
     assert one == three and len(one) > 0
 
 
+@pytest.mark.parametrize("slices", [1, 3])
+def test_s17_pairs_delta_docs_across_micro_batches(
+    spark, tmp_path, monkeypatch, slices
+):
+    """Two identical-text delta documents, ids 5 and 15: one micro-batch
+    at 1 slice (the serve's delta self-join pairs them), two different
+    micro-batches at 3 slices (batch 1's serve must see doc 5, which
+    batch 0 absorbed into the index).  Every other document is random
+    text, so (5, 15) is the only pair."""
+    import random
+    import string
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import bigdata_scala_offline_data_clean_spark.queries.round15 as r15
+
+    rng = random.Random(17)
+    texts = [
+        " ".join(
+            "".join(rng.choices(string.ascii_lowercase, k=6))
+            for _ in range(30)
+        )
+        for _ in range(20)
+    ]
+    texts[15] = texts[5]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(20), pa.int64()), "text": texts}),
+        str(tmp_path / "documents.parquet"),
+    )
+    monkeypatch.setattr(r15, "_S17_SLICES", slices)
+    got = [
+        tuple(r)
+        for r in r15.s17_stream_index_absorb(spark, str(tmp_path)).collect()
+    ]
+    assert got == [(5, 15, 1.0)]
+
+
 def test_phash_index_absorb_two_day_lifecycle(spark, tmp_path):
     """c72's daily loop must close like c70's (the minhash twin of
     test_minhash_index_absorb_two_day_lifecycle): build the perceptual

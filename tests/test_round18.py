@@ -135,26 +135,30 @@ def test_value_collapsed_percentiles_match_builtin(spark):
 
 
 # ---------------------------------------------------------------------------
-# reliable_pins production default (VERDICT r17 task #10): with a
-# checkpoint dir configured the composite lifecycles route every stage
-# pin through replicated checkpoint() automatically, with identical
-# results; without one, nothing changes (the local bench path).
+# The pin policy comes from the session: with a checkpoint dir configured
+# every pin_frame is a replicated checkpoint(), with identical results;
+# without one, nothing is written (the local bench path).
 # ---------------------------------------------------------------------------
 
 
 def test_reliable_pins_auto_resolution(spark, tmp_path):
+    import glob
+
     from bigdata_scala_offline_data_clean_spark.operators.ordering import (
-        auto_reliable_pins,
+        pin_frame,
     )
 
+    df = spark.range(0, 100, numPartitions=2)
+    ckpt = tmp_path / "ckpt"
     sc = spark.sparkContext
     prior = sc.getCheckpointDir()  # other tests may have set one
     try:
         sc._jsc.setCheckpointDir(None)
-        assert sc.getCheckpointDir() is None
-        assert auto_reliable_pins(spark) is False
-        sc.setCheckpointDir(str(tmp_path / "ckpt"))
-        assert auto_reliable_pins(spark) is True
+        assert pin_frame(df, eager=True).count() == 100
+        assert not glob.glob(str(tmp_path / "**" / "rdd-*"), recursive=True)
+        sc.setCheckpointDir(str(ckpt))
+        assert pin_frame(df).count() == 100
+        assert glob.glob(str(ckpt / "**" / "rdd-*"), recursive=True)
     finally:
         if prior is None:
             sc._jsc.setCheckpointDir(None)

@@ -176,6 +176,31 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS dwd_bright")
 
 
+def test_write_bucketed_append_from_another_session_is_visible(
+    spark, tmp_path
+):
+    """A streaming micro-batch is a frame of a CLONED session; its
+    append must be visible to the warehouse session at once, with no
+    manual ``refreshTable`` (s17 serves each micro-batch against the
+    index its earlier micro-batches absorbed)."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    spec = dict(bucket_cols=["k"], buckets=4, sort_cols=["k"])
+    try:
+        wh.write_bucketed(
+            spark.range(100).withColumnRenamed("id", "k"), "dwd", "fresh",
+            **spec,
+        )
+        assert wh.bucketed_table("dwd", "fresh").count() == 100
+        other = spark.newSession()
+        wh.write_bucketed(
+            other.range(100, 150).withColumnRenamed("id", "k"),
+            "dwd", "fresh", **spec, mode="append",
+        )
+        assert wh.bucketed_table("dwd", "fresh").count() == 150
+    finally:
+        spark.sql("DROP TABLE IF EXISTS dwd_fresh")
+
+
 def test_compact_partition_reduces_files(spark, tmp_path):
     import glob
 

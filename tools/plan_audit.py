@@ -804,7 +804,7 @@ EXPECTATIONS: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
         ("CartesianProduct", "SortMergeJoin"),
         None,
     ),
-    # persisted-IVF serve: freeze_result's eager localCheckpoint (the
+    # persisted-IVF serve: the eager result pin_frame (the
     # scratch index dir is rmtree'd) truncates lineage, so the audited
     # plan is the checkpointed scan only -- the serve-path properties
     # are pinned in test_c69_serves_from_probed_cells_only instead
@@ -820,7 +820,7 @@ EXPECTATIONS: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
         ("CartesianProduct", "NestedLoop"),
         None,
     ),
-    # persisted MinHash index serve (round 14): freeze_result truncates
+    # persisted MinHash index serve (round 14): the eager result pin truncates
     # lineage (the bucketed index table is DROPped), so the audited plan
     # is the checkpointed scan -- the serve-path properties (index side
     # joins with zero exchange off its bucket spec; answer == a07
@@ -839,7 +839,7 @@ EXPECTATIONS: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
     "a214_audio_fingerprint_dedup": (
         (), ("CartesianProduct", "NestedLoop"), None,
     ),
-    # index-erasure lifecycle (round 15): freeze_result truncates
+    # index-erasure lifecycle (round 15): the eager result pin truncates
     # lineage (the bucketed index is DROPped), so the audited plan is
     # the checkpointed scan -- the lifecycle properties (serve-after-
     # erase == full recompute without erased docs; the tombstone
@@ -885,7 +885,7 @@ EXPECTATIONS: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
         ("CartesianProduct",),
         None,
     ),
-    # cross-index erasure audit (round 15): freeze_result truncates
+    # cross-index erasure audit (round 15): the eager result pin truncates
     # lineage (scratch indexes are dropped); the per-index erase pins
     # live in tests/test_round15.py and the count identities ARE the
     # oracle
@@ -922,7 +922,7 @@ EXPECTATIONS: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
     "a218_semdedup_calibrated": (
         (), ("CartesianProduct", "NestedLoop"), None,
     ),
-    # streaming tau calibration (round 16): freeze_result truncates
+    # streaming tau calibration (round 16): the eager result pin truncates
     # lineage (the report reads only the maintained O(S) state); the
     # per-batch merge is a TakeOrdered over state+batch and the state
     # identity (top-S of union == merged top-S) is pinned in
@@ -940,7 +940,7 @@ EXPECTATIONS: dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]] = {
         ("CartesianProduct", "SortMergeJoin"),
         None,
     ),
-    # compaction lifecycle (round 16): freeze_result truncates lineage
+    # compaction lifecycle (round 16): the eager result pin truncates lineage
     # (the bucketed index is DROPped); the per-state plan pins (zero
     # index-side exchanges with tombstones pending AND after the
     # compaction rewrite; one file per bucket per generation) live in
